@@ -256,11 +256,8 @@ class TrainingDataCurator:
         # it the shingle cache races its pair-stage consumers (the
         # stop-shingle agg and the capped postings) inside one job and
         # the scan double-computes (measured ~0.8 s WORSE at sf0.1;
-        # OPTIMIZATION_r17.md). The flag exists for re-measurement.
-        from ..queries import dedup as _dedup_mod
-
-        if _dedup_mod._EAGER_PREPPED_FILL:
-            prepped.count()
+        # OPTIMIZATION_r17.md).
+        prepped.count()
         cleanup: list[DataFrame] = [prepped]
         try:
             pairs = _exact_jaccard_pairs(
@@ -319,7 +316,7 @@ class TrainingDataCurator:
 
         ``prepared_pairs`` (r17) lets such a caller hand in the
         (doc_a, doc_b) pair plan it prepared once per process
-        (registry._prepared_plan) instead of re-constructing +
+        (registry.prepared_plan) instead of re-constructing +
         re-analyzing the band-join/cosine tree per call — valid only
         when the pair plan is fully static (no per-call persist in its
         tree, i.e. built with ``materialize=False`` over a durable

@@ -60,7 +60,7 @@ from ..sinks.shards import (
 )
 from ..sources.parquet import read_table, spread_scan
 from .dedup import _truncate_lineage
-from .registry import _prepared_lifecycle_plan, register
+from .registry import prepared_lifecycle_plan, register
 from .text import _SW_ARR_SQL, _tokens_sql
 
 _WS = r"\s+"
@@ -423,21 +423,14 @@ def llm_curation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r17: plan construction + Catalyst analysis of the 13-variant
     union (measured ~1.5 s/call, the row's single largest cost) run
-    once per (app, sf_dir) via _prepared_lifecycle_plan; every call
+    once per (app, sf_dir) via prepared_lifecycle_plan; every call
     still re-persists the corpus and span-postings caches, executes
     the full scan/shuffle pipeline through a fresh QueryExecution
     (so the cache manager sees THIS call's registrations), truncates,
     and unpersists — the per-call persist lifecycle the r16 verdict
     required intact."""
-    out, frames = (
-        _prepared_lifecycle_plan(
-            spark,
-            "llm_curation_suite",
-            sf_dir,
-            lambda: _llm_union_build(spark, sf_dir),
-        )
-        if _LLM_PREPARED
-        else _llm_union_build(spark, sf_dir)
+    out, frames = prepared_lifecycle_plan(
+        spark, "llm_curation_suite", sf_dir, lambda: _llm_union_build(spark, sf_dir)
     )
     for f in frames:
         f.persist()
@@ -448,11 +441,6 @@ def llm_curation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         for f in frames:
             f.unpersist()
-
-
-#: r17 measurement hook (tools/ab_flags.py): False rebuilds + re-analyzes
-#: the union per call (the r16 behavior) for interleaved A/Bs.
-_LLM_PREPARED = True
 
 
 def _llm_union_build(

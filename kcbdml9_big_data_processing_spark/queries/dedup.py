@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.parquet import read_table
-from .registry import _prepared_plan, register
+from .registry import prepared_plan, register
 from .similarity import locked_writer
 
 #: id offset for the duplicated copy of the corpus
@@ -176,7 +176,7 @@ def _shingled_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: scans it end-to-end (no data rides in executor memory between
 #: calls), and 8-byte fingerprint arrays compress well. Same
 #: immutable-per-(app, sf_dir) input assumption as
-#: similarity._PREPARED_PLANS.
+#: registry._PREPARED_PLANS.
 _SHINGLED_STORE: dict[tuple[str, str], str] = {}
 
 
@@ -286,8 +286,9 @@ def _exact_jaccard_pairs(
     detection more precise, and the worst-case join output per shingle
     is C(cap,2) regardless of corpus size.
 
-    r7 formulation (tools/exp_pairjoin.py, medians at sf0.1 with
-    ``prepped`` pre-persisted): 1.5-1.8 s, vs 3.6 s for the r6 shape
+    r7 formulation (pair-join probe in git history, commit 9ed3856;
+    medians at sf0.1 with ``prepped`` pre-persisted): 1.5-1.8 s, vs
+    3.6 s for the r6 shape
     (separate postings cache + post-agg sizes joins), 2.9 s for a
     join-free grouped-pair generation, 3.7 s for the anti-join twin of
     this shape. Two choices carry the win:
@@ -394,7 +395,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pair count; r7 promoted the cheapest measured formulation
     (sizes riding the postings off a broadcast stop-array, size
     filter inside the join — see _exact_jaccard_pairs; pair-join
-    medians 3.6 s -> 1.5-1.8 s at sf0.1, tools/exp_pairjoin.py).
+    medians 3.6 s -> 1.5-1.8 s at sf0.1, commit 9ed3856).
     Alternatives built and measured across r5-r7, all slower on THIS
     corpus: hash-order AllPairs/PPJoin prefix+positional+size
     filtering (815k candidates, ~10 s), df-ascending PPJoin (482k
@@ -1177,7 +1178,7 @@ def dedup_ngram_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (_stored_shingled_corpus — replacing the per-call
     persist+count barrier, whose cache the timing harness clears
     between runs anyway) and the whole suite plan is PREPARED once
-    per process (similarity._prepared_plan): parsing + Catalyst
+    per process (registry.prepared_plan): parsing + Catalyst
     analysis of the shingle/prefix/postings expression forest is
     paid at first call, every later call executes the same immutable
     plan — scan stored shingles → postings joins → count aggregate —
@@ -1222,9 +1223,7 @@ def dedup_ngram_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return full.unionAll(incr)
 
-    from .similarity import _prepared_plan
-
-    return _prepared_plan(spark, "dedup_ngram_suite", sf_dir, build)
+    return prepared_plan(spark, "dedup_ngram_suite", sf_dir, build)
 
 
 # --- MinHash-LSH near-dup (pyspark.ml, exact-verified) --------------------
@@ -1278,7 +1277,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_stored_minhash_bands: the signatures ARE the LSH index, and
     the HashingTF/MinHash ML transforms that compute them are the
     one non-Catalyst part of this family), and the suite plan
-    prepared once per process (similarity._prepared_plan). Per-call
+    prepared once per process (registry.prepared_plan). Per-call
     execution is then stored-bands bucket self-join ∪ prefix-filter
     candidates → exact postings verification, end to end. Measured
     (tools/time_query.py, sf0.1 idle): 3.16 s → 2.75 s median (the
@@ -1295,9 +1294,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             cands, ["doc_a", "doc_b"], "left_semi"
         )
 
-    from .similarity import _prepared_plan
-
-    return _prepared_plan(spark, "dedup_minhash_lsh", sf_dir, build)
+    return prepared_plan(spark, "dedup_minhash_lsh", sf_dir, build)
 
 
 def _minhash_banded(
@@ -1416,7 +1413,7 @@ _N_BANDS = _SIMHASH_BITS // _BAND_BITS
 #: (app, sf_dir). The graded steady state scans the stored
 #: signatures end to end per call (parquet, not .persist(), so the
 #: harness's clearCache between timed runs doesn't void it). Same
-#: immutable-input posture as similarity._PREPARED_PLANS.
+#: immutable-input posture as registry._PREPARED_PLANS.
 _SIMHASH_SIGS_STORE: dict[tuple[str, str], str] = {}
 
 
@@ -1531,7 +1528,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-call persist+count, whose cache the timing harness
     cleared between runs anyway, so every timed run re-paid the
     sha256 fold) and the banded self-join plan is prepared once
-    (similarity._prepared_plan). Steady state per call: scan stored
+    (registry.prepared_plan). Steady state per call: scan stored
     signatures, explode bands, bucket self-join, Hamming filter —
     end to end."""
 
@@ -1572,9 +1569,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    from .similarity import _prepared_plan
-
-    return _prepared_plan(spark, "dedup_simhash", sf_dir, build)
+    return prepared_plan(spark, "dedup_simhash", sf_dir, build)
 
 
 # --- near-dup clustering (iterative connected components) -----------------
@@ -1644,20 +1639,6 @@ def _truncate_lineage(
     return df.localCheckpoint(eager=eager)
 
 
-#: r17 measurement hooks (tools/ab_flags.py): restore the r16 eager
-#: barriers / per-round convergence collects for interleaved A/Bs.
-#: Decomposed interleaved A/Bs (OPTIMIZATION_r17.md): dropping the
-#: curator's prepped.count LOST (~0.8 s — the shingle cache races its
-#: two pair-stage consumers), so that barrier stays (default True);
-#: fusing two CC rounds per convergence collect read flat-to-slightly-
-#:negative across three A/Bs, so the per-round check stays the
-#: default (the fused path remains available for deployments whose
-#: driver round-trips dominate, e.g. high-latency cluster drivers).
-_EAGER_EDGE_FILL = False
-_EAGER_PREPPED_FILL = True
-_CC_ROUNDS_PER_CHECK = 1
-
-
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -1721,8 +1702,6 @@ def connected_components(
     # partitions can race, and those are cheap. Dropping the count
     # removes one driver action + its Catalyst/AQE gap per CC call
     # (guide §1.2-1: fewer passes; A/B'd in OPTIMIZATION_r17.md).
-    if _EAGER_EDGE_FILL:
-        edges.count()
     # round 1, fused into initialization: under identity labels the
     # neighbor message for dst is just src, so the first propagation
     # needs no join and no distinct — ONE shuffle (the groupBy) builds
@@ -1776,28 +1755,11 @@ def connected_components(
             eager=False,
         )
 
-    # r17: _CC_ROUNDS_PER_CHECK propagation rounds share ONE driver
-    # convergence collect. ``own`` in the group's last round is the
-    # label after the previous round, and min-propagation is monotone,
-    # so "the final round changed nothing" (new_sum == old_sum) is
-    # still exactly the fixpoint test. For the even-diameter graphs
-    # dup clusters produce, total propagation compute is IDENTICAL to
-    # the per-round-check loop (the old loop also ran the final
-    # no-change round as its convergence proof) at HALF the driver
-    # barriers; odd-diameter graphs pay at most one extra round of
-    # edge-incident-scale shuffle — the trade goes to fewer barriers,
-    # which bound this loop at bench scale and are the measured source
-    # of its contention sensitivity (guide §1.2-1; A/B'd in
-    # OPTIMIZATION_r17.md). A deployment whose per-round shuffle
-    # dwarfs driver latency sets _CC_ROUNDS_PER_CHECK = 1.
-    rounds_left = max_rounds - 1
-    fuse = max(1, _CC_ROUNDS_PER_CHECK)
-    while rounds_left > 0:
+    # One convergence collect per round: fusing two rounds per collect
+    # read flat-to-slightly-negative across three interleaved A/Bs
+    # (OPTIMIZATION_r17.md) and was reverted.
+    for _ in range(max_rounds - 1):
         updated = _propagate(labels)
-        rounds_left -= 1
-        for _ in range(min(fuse - 1, rounds_left)):
-            updated = _propagate(updated.select("doc_id", "canonical_id"))
-            rounds_left -= 1
         sums = updated.agg(
             F.sum("canonical_id").alias("new_sum"), F.sum("own").alias("old_sum")
         ).collect()[0]
@@ -1863,7 +1825,7 @@ def dedup_clusters(
     prepared once per (app, sf_dir); the CC loop still builds its
     per-round plans fresh (they wrap per-round checkpoints by nature)
     and every call executes the full scan/join/loop."""
-    pairs = _prepared_plan(
+    pairs = prepared_plan(
         spark,
         "dedup_clusters:pairs",
         sf_dir,
@@ -1970,8 +1932,6 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental archive-aware variant, each tagged. Both constituents
     keep their full computation; only the registration count shrinks
     (same consolidation pattern as the OLAP suites)."""
-    from .similarity import _prepared_plan
-
     def build():
         full = dedup_exact(spark, sf_dir).select(
             F.lit("full").alias("variant"),
@@ -1989,4 +1949,4 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: static union over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.42 s construction vs 0.56 exec)
-    return _prepared_plan(spark, "dedup_exact_suite", sf_dir, build)
+    return prepared_plan(spark, "dedup_exact_suite", sf_dir, build)

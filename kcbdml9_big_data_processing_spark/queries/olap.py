@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql, epoch_millis
 from ..sources.parquet import read_table
 from .parity import LATEST_EVENT_ORACLE
-from .registry import register
+from .registry import prepared_plan, register
 
 
 # --- TPC-H Q1 analog -----------------------------------------------------
@@ -975,13 +975,11 @@ def join_revenue_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure).
 
     r11: the union-of-four-pipelines plan is PREPARED once per
-    process (_prepared_plan) — exp_plan_vs_exec measured per-call
+    process (prepared_plan) — exp_plan_vs_exec measured per-call
     Catalyst construction+analysis at 1.2 s vs 0.88 s execution
     (four full TPC-H pipelines re-analyzed per call, the same
     analysis-bound shape the ngram/ann suites had). Inputs are
     immutable per (app, sf_dir), so re-analysis buys nothing."""
-    from .similarity import _prepared_plan
-
     def build() -> DataFrame:
         q3 = shipping_priority(spark, sf_dir).select(
             F.lit("q3_shipping").alias("variant"),
@@ -1005,7 +1003,7 @@ def join_revenue_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return q3.unionAll(q5).unionAll(brand).unionAll(q18)
 
-    return _prepared_plan(spark, "join_revenue_suite", sf_dir, build)
+    return prepared_plan(spark, "join_revenue_suite", sf_dir, build)
 
 
 @register(
@@ -1108,8 +1106,6 @@ def grouped_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-representable doubles (counts < 2^53, fixed-point
     averages, rank-selected raw values), so the cross-engine hash
     stays bit-exact."""
-    from .similarity import _prepared_plan
-
     def build() -> DataFrame:
         ets = event_type_stats(spark, sf_dir).select(
             F.lit("event_type_stats").alias("variant"),
@@ -1164,4 +1160,4 @@ def grouped_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: four static pipelines over immutable inputs — prepared once
     # per process (exp_plan_vs_exec: 0.64 s construction vs 0.79 exec)
-    return _prepared_plan(spark, "grouped_stats_suite", sf_dir, build)
+    return prepared_plan(spark, "grouped_stats_suite", sf_dir, build)

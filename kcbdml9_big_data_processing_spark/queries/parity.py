@@ -27,7 +27,7 @@ from ..schemas import EVENT_PROPS_SCHEMA
 from ..sinks.parquet import write_partitioned_archive
 from ..sources.parquet import read_partitioned_archive, read_table
 from ..tmpdirs import scratch_dir
-from .registry import register
+from .registry import prepared_plan, register
 
 HOUR = 3600
 NINETY_SECONDS = 90
@@ -134,8 +134,6 @@ def bytes_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
     type != 'antenna_bytes_sliding' for the strict reference shape;
     bench._CONSTITUENTS maps the merged row to its priors. The freed
     slot gates stream_running_totals (queries/stream.py)."""
-    from .similarity import _prepared_plan
-
     def build():
         return (
             bytes_antenna_90s(spark, sf_dir)
@@ -146,7 +144,7 @@ def bytes_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: static four-variant union over immutable inputs — prepared
     # once per process (exp_plan_vs_exec: 0.58 s construction/call)
-    return _prepared_plan(spark, "bytes_90s", sf_dir, build)
+    return prepared_plan(spark, "bytes_90s", sf_dir, build)
 
 
 # --- A4-A6 analogs: 1-hour batch windows (BatchJobImpl.scala:46-77),
@@ -209,8 +207,6 @@ def bytes_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums per antenna, email (through the J1 enrichment join), and app,
     unioned with the `type` discriminator (BatchJobImpl.scala:46-77,
     JdbcProvisioner.scala:54-55)."""
-    from .similarity import _prepared_plan
-
     def build():
         return (
             bytes_antenna_hourly(spark, sf_dir)
@@ -220,7 +216,7 @@ def bytes_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: static three-variant union over immutable inputs — prepared
     # once per process (exp_plan_vs_exec: 0.43 s construction/call)
-    return _prepared_plan(spark, "bytes_hourly", sf_dir, build)
+    return prepared_plan(spark, "bytes_hourly", sf_dir, build)
 
 
 # --- J1: enrichment join ------------------------------------------------
@@ -504,8 +500,6 @@ def events_near_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation sits inside the driver's oracle gate."""
     from ..operators.temporal import interval_join
 
-    from .similarity import _prepared_plan
-
     def build():
         ev = read_table(spark, sf_dir, "events")
         errors = ev.where(F.col("event_type") == "error").select(
@@ -532,4 +526,4 @@ def events_near_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: static plan over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.29 s construction vs 0.52 exec)
-    return _prepared_plan(spark, "events_near_errors", sf_dir, build)
+    return prepared_plan(spark, "events_near_errors", sf_dir, build)

@@ -19,10 +19,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #: the suite rows (four TPC-H pipelines re-analyzed per
 #: join_revenue_suite call was the worst). Execution is NOT cached:
 #: every call's action still scans, shuffles, and aggregates the
-#: real data — only the plan object is reused. Lived in
-#: queries/similarity.py through r10; hoisted here in r11 so the
-#: registry can apply it declaratively (``register(prepare=True)``).
-_PREPARED_PLANS: dict[tuple[str, str, str], DataFrame] = {}
+#: real data — only the plan object is reused. Entries of OTHER
+#: applicationIds are evicted on lookup, so a long-lived process
+#: cycling SparkSessions never accumulates plans pinned to dead
+#: contexts. The analyzed plan freezes the parquet FILE LISTING of
+#: its sources, so data under one sf_dir must not be rewritten within
+#: an application's lifetime (a new corpus/index version gets a new
+#: path, hence a new key). A value is the DataFrame itself for
+#: :func:`prepared_plan` and the ``(out, frames)`` pair for
+#: :func:`prepared_lifecycle_plan`; query names are unique, so one
+#: key never holds both shapes.
+_PREPARED_PLANS: dict[tuple[str, str, str], object] = {}
 
 #: guards the eviction loop + lookup/insert (ADVICE r11): registry
 #: callers are single-threaded today, but an unguarded check-then-act
@@ -33,31 +40,36 @@ _PREPARED_PLANS: dict[tuple[str, str, str], DataFrame] = {}
 _PREPARED_LOCK = threading.Lock()
 
 
-#: r17 measurement hook (tools/ab_flags.py): True makes _prepared_plan
-#: and _prepared_lifecycle_plan call build() every time (the
-#: rebuild-per-call behavior), so interleaved A/Bs can isolate what
-#: plan preparation is worth for a given query.
-_PREPARE_DISABLED = False
-
-
-def _prepared_plan(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
-    if _PREPARE_DISABLED:
-        return build()
+def _prepared(spark: SparkSession, name: str, sf_dir: str, build):
+    """Return the cached entry for (app, name, sf_dir), calling
+    ``build`` on a miss; entries of other (stopped) applications are
+    evicted first."""
     app_id = spark.sparkContext.applicationId
     key = (app_id, name, sf_dir)
     with _PREPARED_LOCK:
         for k in [k for k in _PREPARED_PLANS if k[0] != app_id]:
             del _PREPARED_PLANS[k]
-        df = _PREPARED_PLANS.get(key)
-    if df is None:
+        entry = _PREPARED_PLANS.get(key)
+    if entry is None:
+        entry = build()
+        with _PREPARED_LOCK:
+            entry = _PREPARED_PLANS.setdefault(key, entry)
+    return entry
+
+
+def prepared_plan(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
+    """The plain prepared form: every call returns the SAME analyzed
+    DataFrame ``build()`` produced on the first call."""
+
+    def analyzed() -> DataFrame:
         df = build()
         df.schema  # force analysis at preparation time
-        with _PREPARED_LOCK:
-            df = _PREPARED_PLANS.setdefault(key, df)
-    return df
+        return df
+
+    return _prepared(spark, name, sf_dir, analyzed)
 
 
-def _prepared_lifecycle_plan(
+def prepared_lifecycle_plan(
     spark: SparkSession, name: str, sf_dir: str, build
 ) -> "tuple[DataFrame, tuple[DataFrame, ...]]":
     """The cache-manager-aware prepared variant for queries whose
@@ -76,32 +88,19 @@ def _prepared_lifecycle_plan(
     new QueryExecution whose withCachedData lookup resolves against
     the CURRENT call's cache registrations. That is what makes this
     cache-manager-aware: reusing the first call's *physical* plan
-    (what the plain prepared cache would pin) would keep executing its
+    (what the plain prepared form would pin) would keep executing its
     first-call InMemoryRelation, whose re-filled blocks detach from
     the cache manager and leak across calls. Only the analyzed
     logical plan is reused — optimization, physical planning, and the
     full scan/shuffle execution happen per call."""
-    if _PREPARE_DISABLED:
-        out, frames = build()
-        return out, tuple(frames)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, name, sf_dir)
-    with _PREPARED_LOCK:
-        for k in [k for k in _PREPARED_ARTIFACTS if k[0] != app_id]:
-            del _PREPARED_ARTIFACTS[k]
-        pair = _PREPARED_ARTIFACTS.get(key)
-    if pair is None:
+
+    def analyzed() -> "tuple[DataFrame, tuple[DataFrame, ...]]":
         out, frames = build()
         out.schema  # force analysis at preparation time
-        with _PREPARED_LOCK:
-            pair = _PREPARED_ARTIFACTS.setdefault(key, (out, tuple(frames)))
-    out, frames = pair
+        return out, tuple(frames)
+
+    out, frames = _prepared(spark, name, sf_dir, analyzed)
     return out.select("*"), frames
-
-
-#: generic per-process artifact cache behind _prepared_lifecycle_plan
-#: (same keying + eviction as _PREPARED_PLANS)
-_PREPARED_ARTIFACTS: dict[tuple[str, str, str], tuple] = {}
 
 
 @dataclass(frozen=True)
@@ -133,7 +132,8 @@ def register(
     per-call persist lifecycle (a cached plan pins its first call's
     physical plan, so per-call persist/unpersist cycles would silently
     detach from the cache manager). Functions that need preparation
-    around internal stores/actions call _prepared_plan themselves."""
+    around internal stores/actions call :func:`prepared_plan`
+    themselves."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
@@ -143,7 +143,7 @@ def register(
 
             @functools.wraps(fn)
             def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-                return _prepared_plan(
+                return prepared_plan(
                     spark, name, sf_dir, lambda: fn(spark, sf_dir)
                 )
 

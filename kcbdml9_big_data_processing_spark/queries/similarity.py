@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.parquet import read_table
-from .registry import register
+from .registry import prepared_plan, register
 
 _DIM = 64
 _SCALE = 1_000_000_000  # 1e9 fixed-point for dot products
@@ -449,35 +449,6 @@ def _ensure_index(kind: str, emb: DataFrame, sf_dir: str, build_fn) -> str:
         build_fn(emb, path)
         _INDEX_PATHS[key] = path
     return path
-
-
-#: per-process cache of PREPARED (analyzed) search plans, keyed by
-#: (Spark application id, plan key). Companion to _INDEX_PATHS: a
-#: search service builds the index once per version AND prepares the
-#: search plan once per index version, then executes it per probe
-#: batch — DataFrames are immutable logical plans, so re-executing a
-#: cached one re-runs the full scan→join→re-rank pipeline against the
-#: stored tables every time (no data is cached; only the ~1.4 s of
-#: SQL-parse + Catalyst analysis the 64-dim fixed-point expression
-#: trees cost per preparation — measured in tools/exp_ann_profile.py).
-#: Keyed by applicationId so a new SparkSession never sees a stale
-#: plan bound to a stopped context; entries for OTHER applicationIds
-#: are evicted on lookup (r9 ADVICE — a long-lived process cycling
-#: SparkSessions must not accumulate plans pinned to dead contexts).
-#:
-#: Input-immutability assumption (same posture as _INDEX_PATHS, made
-#: explicit per r9 ADVICE): the analyzed plan freezes the parquet
-#: FILE LISTING of its source tables, so data under one sf_dir must
-#: not be rewritten within an application's lifetime — true for the
-#: read-only testdata here, and the documented contract for a search
-#: service (a new corpus/index version gets a new path, which is a
-#: new cache key; see the versioned dedup-index layout).
-#:
-#: The cache itself moved to registry.py in r11 (the registry applies
-#: it declaratively via register(prepare=True)); re-exported here
-#: because the index-store modules and the plan-audit tool import it
-#: from this module.
-from .registry import _PREPARED_PLANS, _prepared_plan  # noqa: E402,F401
 
 
 # --- crash-safe index generations (r10, verdict #5) -----------------------
@@ -1747,7 +1718,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb as doubles + norm + LSH signature — is materialized once per
     process (_stored_near_dup_prepped, replacing the per-call
     persist+count whose cache the harness cleared between timed runs)
-    and the band→join→cosine plan is prepared once (_prepared_plan:
+    and the band→join→cosine plan is prepared once (prepared_plan:
     the 64-dim fixed-point cosine trees cost ~0.7 s of per-call
     Catalyst analysis, tools/exp_plan_vs_exec.py). Every execution
     scans the stored corpus end to end through the full pipeline."""
@@ -1756,7 +1727,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         prepped = _stored_near_dup_prepped(spark, sf_dir)
         return embedding_near_dup_pairs(prepped, materialize=False)
 
-    return _prepared_plan(spark, "embedding_near_dup", sf_dir, build)
+    return prepared_plan(spark, "embedding_near_dup", sf_dir, build)
 
 
 def _semantic_clusters_oracle() -> str:
@@ -1800,14 +1771,14 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r17: the pair plan — static over the durable store, no per-call
     persist in its tree (materialize=False) — is prepared once per
-    (app, sf_dir), the same _prepared_plan posture the sibling
+    (app, sf_dir), the same prepared_plan posture the sibling
     embedding_near_dup row has used since r10; the CC loop still
     builds its per-round plans fresh and every call executes the full
     band join + cosine + loop."""
     from ..jobs.training_data import TrainingDataCurator
 
     corpus = _stored_near_dup_prepped(spark, sf_dir)
-    pairs = _prepared_plan(
+    pairs = prepared_plan(
         spark,
         "semantic_dedup_clusters:pairs",
         sf_dir,
@@ -1955,7 +1926,7 @@ def knn_centroid_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: static union over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.37 s construction vs 0.68 exec)
-    return _prepared_plan(spark, "knn_centroid_suite", sf_dir, build)
+    return prepared_plan(spark, "knn_centroid_suite", sf_dir, build)
 
 
 # --- product-quantization (PQ) ANN ----------------------------------------
@@ -2768,13 +2739,14 @@ def ann_index_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-gated, not just row-counted."""
     # r9: NO suite-level persist. The r8 fold persisted the embeddings
     # scan and forced it with a count() before planning the variants;
-    # measured (tools/exp_ann_profile.py), that barrier cost ~0.8 s per
-    # run — a serial cache-materialization job plus cache-write cost —
+    # measured (ANN profiling probe, commit 18dbd9f), that barrier
+    # cost ~0.8 s per run — a serial cache-materialization job plus
+    # cache-write cost —
     # while the thing it saved (three extra column-pruned scans of a
     # 0.8 MB parquet file) is nearly free. The four variants now feed
     # straight off the shared lazily-read scan; the stored-index builds
     # behind _ensure_index remain once-per-process, and the composed
-    # plan is PREPARED once per process (_prepared_plan): parsing +
+    # plan is PREPARED once per process (prepared_plan): parsing +
     # analyzing the four 64-dim fixed-point expression trees costs
     # ~1.4 s, paid at first call; every later call executes the same
     # immutable plan against the stored tables end-to-end.
@@ -2799,7 +2771,7 @@ def ann_index_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = out.unionAll(p)
         return out
 
-    return _prepared_plan(spark, "ann_index_suite", sf_dir, build)
+    return prepared_plan(spark, "ann_index_suite", sf_dir, build)
 
 
 def _sem_incr_oracle() -> str:
@@ -2953,7 +2925,7 @@ def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the work is NEW, and a merged row would trip the bench regression
     gate against a prior that never contained it.
 
-    r10: search plan prepared once per process (_prepared_plan) on
+    r10: search plan prepared once per process (prepared_plan) on
     top of the per-process index build — ~0.7 s of per-call analysis
     of the assignment/cosine expression trees
     (tools/exp_plan_vs_exec.py); execution still runs the full
@@ -2971,4 +2943,4 @@ def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return semantic_dedup_against_index(spark, path, batch)
 
-    return _prepared_plan(spark, "semantic_dedup_incremental", sf_dir, build)
+    return prepared_plan(spark, "semantic_dedup_incremental", sf_dir, build)

@@ -34,7 +34,8 @@ from .registry import register
 #: recorded in the checkpoint), and every micro-batch then pays a
 #: state-store open/maintain/commit per partition — a fixed cost that
 #: dwarfs the actual state at replay scale. Measured at sf0.1
-#: (tools/exp_stream_parts.py, median of 3): stream_join_suite
+#: (per-count replay probe, median of 3; the probe tool is in git
+#: history, commit d9a6e68): stream_join_suite
 #: 11.4 s @ 32 partitions -> 4.6 @ 16 -> 2.8 @ 8 -> 2.3 @ 4;
 #: stream_bytes_90s_suite 3.6 -> 2.2 -> 1.8 -> 1.7. Partitioning is
 #: by key hash either way, so results are identical (the oracle rows
@@ -46,7 +47,7 @@ from .registry import register
 #: (stream_running_totals) probed separately — its hot cost is
 #: per-key Python invocation, so more partitions buy Python-worker
 #: parallelism where the window aggs only pay more state commits.
-#: Series (exp_stream_parts.py running_totals, sf0.1 median-of-3):
+#: Series (the same probe on running_totals, sf0.1 median-of-3):
 #: 4 -> 5.17, 8 -> 4.21, 16 -> 3.85, 32 -> 5.16; interleaved 8-vs-16
 #: A/B steady state ~3.9 vs ~3.6. The ~6-8% edge at 16 is inside
 #: window noise and this session is SHARED — 16 costs join_suite
@@ -70,11 +71,6 @@ _BOUNDED_STATE_PARTITIONS = 4
 
 #: state partitions for stream_running_totals only (see above).
 _RT_STATE_PARTITIONS = 8
-
-#: r17 measurement hook (tools/ab_process.py): "true" restores
-#: core-count-first AQE coalescing on the bounded child sessions.
-_BOUNDED_PARALLELISM_FIRST = "false"
-
 
 def _bounded_session(
     spark: SparkSession, partitions: int | None = None
@@ -142,21 +138,20 @@ def _bounded_session(
         )
         # r17: within the bounded replays, coalesce post-shuffle
         # partitions by the advisory SIZE target instead of stopping
-        # at the core count (parallelismFirst=false — the setting
-        # Spark's own docs recommend for size-respecting coalescing).
-        # A replay's non-stateful stages are KB-scale: coalescing them
-        # to one task removes pure dispatch overhead. Measured via a
-        # full-sweep experiment (this conf set GLOBALLY read -0.5 to
-        # -0.95 s on the stream rows but +2.5 to +5.3 s on the dedup
-        # pair joins, whose post-shuffle stages are compute-dense —
-        # so it ships ONLY here, on the child session the bounded
-        # replays own; fresh-process interleaved A/B in
-        # OPTIMIZATION_r17.md). Scale-neutral: at production replay
-        # sizes post-shuffle partitions exceed the advisory target
-        # and the setting is a no-op.
+        # at the core count (parallelismFirst=false), so a replay's
+        # KB-scale non-stateful stages run as one task. UNPROVEN: no
+        # A/B of this child-session setting is committed.
+        # OPTIMIZATION_r17.md mentions parallelismFirst only to say
+        # the GLOBAL conf was examined and left alone, and VERDICT.md
+        # records stream_join at 0.90x and stream_bytes_90s at 0.83x
+        # vs r16 at the commit that added it.
+        # The fresh-process A/B that keeps or reverts it is ROADMAP's
+        # carried item "Prove or revert the bounded-session
+        # parallelismFirst conf". At production replay sizes
+        # post-shuffle partitions exceed the advisory target and the
+        # setting is a no-op.
         bs.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            _BOUNDED_PARALLELISM_FIRST,
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
         )
         sessions[partitions] = bs
     return bs

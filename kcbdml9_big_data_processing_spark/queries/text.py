@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql
 from ..sources.parquet import read_table, spread_scan
-from .registry import register
+from .registry import prepared_plan, register
 
 #: whitespace tokenizer shared by every query (and its oracle).
 _WS = r"\s+"
@@ -458,7 +458,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct to columns while evaluating its input once.
 
     r10: the plan is prepared once per process
-    (similarity._prepared_plan — the ann/ngram recipe): the ten
+    (registry.prepared_plan — the ann/ngram recipe): the ten
     profile array literals (hundreds of F.lit elements each) cost
     ~0.4 s of construction + Catalyst analysis per call at idle
     steady-state (A/B time_query median-of-5: 2.55 -> 2.14 s; a
@@ -499,9 +499,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         )[0]
         return docs.select("doc_id", "lang", F.inline(F.array(bound)))
 
-    from .similarity import _prepared_plan
-
-    return _prepared_plan(spark, "language_id", sf_dir, build)
+    return prepared_plan(spark, "language_id", sf_dir, build)
 
 
 # --- PII redaction --------------------------------------------------------
@@ -703,8 +701,6 @@ def term_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``bigram_lift``: corpus top bigrams by collocation lift (see
       :func:`bigram_lift`); doc_id is NULL, n = bigram count,
       value = lift."""
-    from .similarity import _prepared_plan
-
     def build():
         tf = tfidf_top_terms(spark, sf_dir).select(
             F.lit("tfidf").alias("variant"),
@@ -724,4 +720,4 @@ def term_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11: static union over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.46 s construction vs 0.73 exec)
-    return _prepared_plan(spark, "term_stats_suite", sf_dir, build)
+    return prepared_plan(spark, "term_stats_suite", sf_dir, build)

@@ -16,11 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-#: measurement hook (tools/ab_spread.py): True turns every
-#: spread_scan into identity so interleaved same-session A/B runs can
-#: separate the spread's effect from host-window noise.
-_SPREAD_DISABLED = False
-
 #: size-aware cap on the DERIVED spread target (r16 verdict #4): never
 #: manufacture near-empty tasks for a tiny input — the spread target is
 #: bounded by ceil(estimated input bytes / this). The floor is
@@ -32,9 +27,7 @@ _SPREAD_DISABLED = False
 #: binds at 32 or 8 cores — bench behavior is byte-identical to r16;
 #: at the KB-scale correctness SFs it stops a 32-way shuffle of a
 #: handful of rows. Explicit ``min_tasks`` callers bypass it.
-_SPREAD_MIN_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES_PER_TASK", 16384)
-)
+_SPREAD_MIN_BYTES_PER_TASK = 16384
 
 
 def spread_scan(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
@@ -64,8 +57,6 @@ def spread_scan(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
     Round-robin (no key): even spread regardless of key skew; Spark's
     sort-before-repartition keeps retries deterministic over the
     deterministic scan."""
-    if _SPREAD_DISABLED:
-        return df
     spark = df.sparkSession
     if min_tasks is None:
         min_tasks = spark.sparkContext.defaultParallelism

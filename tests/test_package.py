@@ -8,6 +8,7 @@ that class of delivery failure impossible to miss.
 from __future__ import annotations
 
 import importlib
+import pathlib
 
 
 def test_package_imports():
@@ -698,3 +699,42 @@ def test_cli_audit_shards_out_report(spark, tmp_path, capsys):
     rep = spark.read.parquet(report)
     bad = [r["shard"] for r in rep.where(~rep["ok"]).collect()]
     assert bad == [2]
+
+
+_REPO = pathlib.Path(__file__).resolve().parent.parent
+
+
+def _source_files(*dirs: str):
+    for d in dirs:
+        yield from sorted((_REPO / d).rglob("*.py"))
+
+
+def test_prepared_plan_cache_imported_only_from_registry():
+    """The prepared-plan cache has ONE home, queries.registry; nothing
+    may reach it through queries.similarity (the old re-export)."""
+    import ast
+
+    cache_names = {"_prepared_plan", "prepared_plan", "_PREPARED_PLANS"}
+    offenders = []
+    for path in _source_files("kcbdml9_big_data_processing_spark", "tools"):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[-1] == "similarity"
+                and cache_names & {a.name for a in node.names}
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_tool_paths_named_in_source_exist():
+    """Every ``tools/<name>.py`` a comment or docstring cites must
+    exist, so a deleted tool cannot leave stale pointers behind."""
+    import re
+
+    missing = set()
+    for path in _source_files("kcbdml9_big_data_processing_spark", "tools"):
+        for name in re.findall(r"tools/(\w+\.py)", path.read_text()):
+            if not (_REPO / "tools" / name).is_file():
+                missing.add(f"{path.name}: tools/{name}")
+    assert not missing, sorted(missing)

@@ -1,10 +1,9 @@
 """Generic interleaved same-session A/B over module-level flags.
 
-Same discipline as tools/ab_spread.py (this host's foreign bursts make
-sequential comparisons untrustworthy): alternate ON (shipping
-defaults) / OFF (flags forced to the given values) executions of each
-query in one session and compare medians — window drift hits both
-arms equally.
+Load bursts on a shared machine make sequential comparisons
+untrustworthy, so this alternates ON (shipping defaults) / OFF (flags
+forced to the given values) executions of each query in one session
+and compares medians — window drift hits both arms equally.
 
     PYTHONPATH=/root/repo python tools/ab_flags.py QUERY [QUERY...]
         --flag module.attr=VALUE [--flag ...] [--reps N] [--sf DIR]
@@ -36,9 +35,9 @@ def main() -> None:
     ap.add_argument(
         "--keep-prepared",
         action="store_true",
-        help="do NOT clear the prepared-plan cache between runs (for"
-        " A/Bs OF plan preparation itself, where the OFF arm bypasses"
-        " the cache via registry._PREPARE_DISABLED)",
+        help="do NOT clear the prepared-plan cache between runs (both"
+        " arms then time the cache-hit steady state; a flag read only"
+        " at plan construction has no effect)",
     )
     ap.add_argument(
         "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -73,11 +73,11 @@ def main() -> int:
         )
         # fresh frame: queryExecution caches the AQE-wrapped plan on
         # first access, which would hide the codegen markers. Queries
-        # routed through _prepared_plan return the SAME DataFrame
+        # routed through prepared_plan return the SAME DataFrame
         # object on re-invocation (that is the point of the cache), so
         # evict it first or the "fresh" frame is the stale one and the
         # span count reads 0 (r10).
-        from kcbdml9_big_data_processing_spark.queries.similarity import (
+        from kcbdml9_big_data_processing_spark.queries.registry import (
             _PREPARED_PLANS,
         )
 

@@ -2,7 +2,7 @@
 construction + Catalyst analysis and (b) execution, the diagnostic
 that found the ann/ngram prepared-plan wins (r9/r10): if (a) is a
 large share and the query's inputs are immutable per (app, sf_dir),
-routing it through similarity._prepared_plan converts (a) into a
+routing it through registry.prepared_plan converts (a) into a
 pay-once cost without touching what executes.
 
 Queries that cache/prepare internally (ngram/minhash/ann suites)
