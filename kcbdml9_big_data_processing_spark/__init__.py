@@ -15,6 +15,8 @@ SURVEY.md), generalized into a parameterized operator library:
 - ``functions``  — reusable Column-expression builders
 - ``plans``      — physical-plan inspection helpers (pushdown /
   broadcast / codegen assertions for tests)
+- ``store``      — crash-safe commit store (append-only meta logs,
+  index generations, writer locks)
 - ``streaming``  — Structured Streaming jobs and sinks (speed layer)
 - ``queries``    — the named query registry consumed by
   ``__spark_entry__.py`` (each query paired with a DuckDB oracle)

@@ -76,6 +76,8 @@ from __future__ import annotations
 import argparse
 import sys
 
+from . import store
+
 
 def _index_main(argv: list[str], spark=None) -> int:
     ap = argparse.ArgumentParser(prog="kcbdml9-spark index")
@@ -129,12 +131,12 @@ def _index_main(argv: list[str], spark=None) -> int:
         from .session import get_spark
 
         spark = get_spark(app_name=f"kcbdml9-index-{args.family}")
-    # shared invocation-scoped toggle (similarity.scoped_writer_lock_ttl):
+    # shared invocation-scoped toggle (store.scoped_writer_lock_ttl):
     # entered explicitly so the 100-line body keeps its indentation.
     # Entering INSIDE the try keeps spark.stop() reachable when enable
     # rejects the ttl; the cm restores the host's prior setting itself,
     # and __exit__ on the already-finished generator is a no-op.
-    lock_scope = S.scoped_writer_lock_ttl(args.writer_lock_ttl)
+    lock_scope = store.scoped_writer_lock_ttl(args.writer_lock_ttl)
     try:
         lock_scope.__enter__()
         path = args.index_dir
@@ -171,7 +173,7 @@ def _index_main(argv: list[str], spark=None) -> int:
                 # inside the current generation, then whole superseded
                 # build generations
                 D.vacuum_dedup_index(spark, path)
-                S.vacuum_index_generations(spark, path)
+                store.vacuum_index_generations(spark, path)
             else:
                 result = D.dedup_against_index(spark, path, docs())
         elif args.family == "semantic":
@@ -189,7 +191,7 @@ def _index_main(argv: list[str], spark=None) -> int:
                     spark, path, sem_corpus()
                 )
             elif args.action == "vacuum":
-                S.vacuum_index_generations(spark, path)
+                store.vacuum_index_generations(spark, path)
             else:
                 print(
                     f"{args.action} not supported for semantic", file=sys.stderr
@@ -205,7 +207,7 @@ def _index_main(argv: list[str], spark=None) -> int:
                 elif args.action == "search":
                     result = S.search_ivf_index(spark, path, emb(), corpus)
                 elif args.action == "vacuum":
-                    S.vacuum_index_generations(spark, path)
+                    store.vacuum_index_generations(spark, path)
                 else:
                     print(
                         f"{args.action} not supported for ivf", file=sys.stderr
@@ -219,7 +221,7 @@ def _index_main(argv: list[str], spark=None) -> int:
                 elif args.action == "search":
                     result = S.search_pq_index(spark, path, emb(), corpus)
                 elif args.action == "vacuum":
-                    S.vacuum_index_generations(spark, path)
+                    store.vacuum_index_generations(spark, path)
                 else:
                     print(
                         f"{args.action} not supported for pq", file=sys.stderr
@@ -260,11 +262,9 @@ def _index_stats(spark, family: str, path: str) -> int:
             _bucket_meta,
             _tail_dir,
         )
-        from .queries.similarity import _gen_current
-
         # r11: ngram builds are generational too — resolve like the
         # vector families below
-        path = _gen_current(spark, path)
+        path = store.gen_current(spark, path)
         print(f"generation_dir={path}")
         from .queries.dedup import _dir_has_parquet
 
@@ -294,17 +294,13 @@ def _index_stats(spark, family: str, path: str) -> int:
                 f" tail_postings={rows(tail, _POSTINGS_SCHEMA)}"
             )
     elif family == "ivf":
-        from .queries.similarity import _gen_current
-
-        gdir = _gen_current(spark, path)
+        gdir = store.gen_current(spark, path)
         print(f"generation_dir={gdir}")
         cents = spark.read.parquet(f"{gdir}/centroids")
         print(f"cells={cents.select('cell').distinct().count()}")
         print(f"indexed_vectors={rows(f'{gdir}/cells')}")
     elif family == "pq":
-        from .queries.similarity import _gen_current
-
-        gdir = _gen_current(spark, path)
+        gdir = store.gen_current(spark, path)
         print(f"generation_dir={gdir}")
         book = spark.read.parquet(f"{gdir}/book")
         m = book.select("m").distinct().count()
@@ -316,13 +312,9 @@ def _index_stats(spark, family: str, path: str) -> int:
             + str(n_codes // m if n_codes is not None and m else None)
         )
     else:  # semantic
-        from .queries.similarity import (
-            _SEM_BANDS_SCHEMA,
-            _gen_current,
-            _sem_meta,
-        )
+        from .queries.similarity import _SEM_BANDS_SCHEMA, _sem_meta
 
-        gdir = _gen_current(spark, path)
+        gdir = store.gen_current(spark, path)
         print(f"generation_dir={gdir}")
         meta = _sem_meta(spark, path)
         print(
@@ -616,7 +608,6 @@ def _export_shards_main(argv: list[str], spark=None) -> int:
 
     from contextlib import nullcontext
 
-    from .queries import similarity as S
     from .sinks.shards import write_training_shards
     from .sources.parquet import read_table
 
@@ -647,7 +638,7 @@ def _export_shards_main(argv: list[str], spark=None) -> int:
         from .session import get_spark
 
         spark = get_spark(app_name="kcbdml9-export-shards")
-    lock_scope = S.scoped_writer_lock_ttl(args.writer_lock_ttl)
+    lock_scope = store.scoped_writer_lock_ttl(args.writer_lock_ttl)
     try:
         lock_scope.__enter__()
         df = (
@@ -659,7 +650,7 @@ def _export_shards_main(argv: list[str], spark=None) -> int:
             df = df.where(args.where)
         mode = "overwrite" if (args.overwrite or only is not None) else "error"
         lock = (
-            S._maybe_writer_lock(spark, args.out)
+            store.writer_lock(spark, args.out)
             if args.writer_lock_ttl is not None
             else nullcontext()
         )
@@ -1087,7 +1078,6 @@ def _curate_main(argv: list[str], spark=None) -> int:
     from pyspark.sql import functions as F
 
     from .jobs.training_data import CurationConfig, TrainingDataCurator
-    from .queries import similarity as S
     from .queries.dedup import build_dedup_index, extend_dedup_index
 
     weights = None
@@ -1120,7 +1110,7 @@ def _curate_main(argv: list[str], spark=None) -> int:
         from .session import get_spark
 
         spark = get_spark(app_name="kcbdml9-curate")
-    lock_scope = S.scoped_writer_lock_ttl(args.writer_lock_ttl)
+    lock_scope = store.scoped_writer_lock_ttl(args.writer_lock_ttl)
     cleanup: list = []
     try:
         if args.run_root is not None:

@@ -2,10 +2,8 @@
 ``jvm Path + getFileSystem(hadoopConfiguration)`` dance (r15 review:
 the pattern had accumulated five near-copies across dedup/similarity/
 shards and a sixth was about to land in jobs/runs.py; all six now
-resolve through :func:`hadoop_path` — the one remaining raw
-``jvm...Path`` construction, the lock-steal tombstone in
-queries/similarity.py, builds a Path against an fs handle this
-module already resolved). Using the Hadoop FS API (not os.path)
+resolve through :func:`hadoop_path`, as does store.py's lock-steal
+tombstone). Using the Hadoop FS API (not os.path)
 keeps every existence/delete/marker check working on whatever
 filesystem the artifact lives on — local, HDFS, S3A — matching how
 the data itself is written.

@@ -15,8 +15,8 @@ BatchJobImpl.scala:90-100; SURVEY.md §7.4 flagged it, and the index
 family fixed it for indexes in r10/r11.)
 
 This module lifts the index family's recipe (versioned dirs + a tiny
-append-only meta table as the single atomicity point —
-queries/similarity._gen_begin/_gen_commit) to the RUN level:
+append-only meta table as the single atomicity point — store.py, whose
+meta-log functions read and append ``run_meta`` too) to the RUN level:
 
 - every run stages ALL its outputs under ``{root}/runs/r{N:06d}``
   (kept, decisions, step markers);
@@ -66,7 +66,7 @@ on how far it got, read off the staged markers:
   into discarding staged bytes).
 
 Single writer per root: ENFORCED when the opt-in writer-lock layer is
-armed (similarity.enable_index_writer_locking / the CLI's
+armed (store.enable_index_writer_locking / the CLI's
 --writer-lock-ttl) — :func:`curate_run_root` and :func:`vacuum_runs`
 then hold ``{root}/_writer.lock`` for the whole stage-to-publish span
 (r15 verdict #3: two concurrent curate runs compute the SAME next
@@ -90,6 +90,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import store
 from ..fs import delete_recursive as _delete
 from ..fs import dir_has_parquet, exists as _exists
 
@@ -140,9 +141,7 @@ def run_dir(root: str, run_id: int) -> str:
 def _index_version(spark: SparkSession, root: str) -> int:
     """The index's current COMMITTED generation version (0 when the
     index doesn't exist yet or predates generations)."""
-    from ..queries.similarity import _gen_meta_row
-
-    row = _gen_meta_row(spark, index_root(root))
+    row = store.gen_meta_row(spark, index_root(root))
     return 0 if row is None else int(row["version"])
 
 
@@ -162,31 +161,26 @@ def index_root(root: str) -> str:
     return f"{root}/index"
 
 
+def _run_meta(root: str) -> str:
+    return f"{root}/run_meta"
+
+
 def run_rows(spark: SparkSession, root: str) -> list[dict]:
     """Every COMMITTED run's meta row, ascending by run_id ([] on a
-    fresh root). Absence decided by a driver-side FS check, not a
-    caught read error (the _gen_meta_row posture: a transient failure
-    must propagate, not misread as 'fresh root' and silently re-run a
-    full curation). Bounded driver rows: one ~3-field row per
-    PUBLISHED run — days, not data."""
-    meta_dir = f"{root}/run_meta"
-    if not _exists(spark, meta_dir):
-        return []
+    fresh root). Absence is FS-checked (store.meta_rows): a transient
+    read failure must propagate, not misread as 'fresh root' and
+    silently re-run a full curation. Bounded driver rows: one ~3-field
+    row per PUBLISHED run — days, not data."""
     return [
         r.asDict()
-        for r in (
-            spark.read.schema(_RUN_META_SCHEMA)
-            .parquet(meta_dir)
-            .orderBy("run_id")
-            .collect()
-        )
+        for r in store.meta_rows(spark, _run_meta(root), _RUN_META_SCHEMA, "run_id")
     ]
 
 
 def latest_run(spark: SparkSession, root: str) -> dict | None:
     """Newest committed run's meta row as a dict, or None."""
-    rows = run_rows(spark, root)
-    return rows[-1] if rows else None
+    row = store.meta_latest(spark, _run_meta(root), _RUN_META_SCHEMA, key="run_id")
+    return None if row is None else row.asDict()
 
 
 def standing_archive(spark: SparkSession, root: str) -> DataFrame | None:
@@ -219,15 +213,6 @@ def _standing_from_rows(
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
-
-
-def _commit(
-    spark: SparkSession, root: str, run_id: int, rdir: str, mode: str
-) -> None:
-    """THE commit point: one append-only meta row flips the run live."""
-    spark.createDataFrame(
-        [(run_id, rdir, mode)], _RUN_META_SCHEMA
-    ).write.mode("append").parquet(f"{root}/run_meta")
 
 
 def _intent(spark: SparkSession, rdir: str) -> str | None:
@@ -333,7 +318,9 @@ def _resolve_torn(
             " commit was lost; nothing recomputes.",
             file=sys.stderr,
         )
-        _commit(spark, root, run_id, rdir, intent)
+        store.meta_append(
+            spark, _run_meta(root), _RUN_META_SCHEMA, (run_id, rdir, intent)
+        )
         return True
     if state == "index_ahead" and prior is None:
         # fresh root (r15 ADVICE): the orphaned generation reflects an
@@ -427,15 +414,13 @@ def curate_run_root(
     a second torn dir out of consistent state).
 
     With the opt-in writer-lock layer armed
-    (similarity.enable_index_writer_locking / --writer-lock-ttl) the
+    (store.enable_index_writer_locking / --writer-lock-ttl) the
     whole stage-to-publish span holds ``{root}/_writer.lock``: a
     concurrent curate on the same root raises IndexWriterLockError
     instead of interleaving into the same staged run dir (r15 verdict
     #3); a crashed holder's lock is stolen past the TTL exactly like
     the index locks."""
-    from ..queries.similarity import _maybe_writer_lock
-
-    with _maybe_writer_lock(spark, root):
+    with store.writer_lock(spark, root):
         return _curate_run_root_locked(
             spark, root, docs, cfg, benchmark, full, retry_torn,
             repair_index, cleanup,
@@ -573,7 +558,8 @@ def _curate_run_root_locked(
         _mark(spark, f"{rdir}/index_started")
         extend_dedup_index(kept_stored, index_root(root))
         _mark(spark, f"{rdir}/index_done")
-    _commit(spark, root, nxt, rdir, mode)
+    # THE commit point: one append-only meta row flips the run live
+    store.meta_append(spark, _run_meta(root), _RUN_META_SCHEMA, (nxt, rdir, mode))
     return {"run_id": nxt, "dir": rdir, "mode": mode}
 
 
@@ -587,7 +573,7 @@ def vacuum_runs(
     (r15 verdict #2: without this, every run's full kept parquet
     lives forever — O(runs × corpus) dead weight). The index family's
     retention-not-locking posture, lifted to the run level
-    (similarity.vacuum_index_generations): meta rows are never pruned
+    (store.vacuum_index_generations): meta rows are never pruned
     (one skinny row per run; :func:`run_status` marks a vacuumed
     run's row ``present: False``), a reader already planned on a
     retained dir finishes against intact files, and the standing
@@ -597,11 +583,9 @@ def vacuum_runs(
     recovery flags. Holds the root writer lock when the opt-in layer
     is armed, like every other index-family vacuum. Returns the
     deleted dirs."""
-    from ..queries.similarity import _maybe_writer_lock
-
     if retain < 0:
         raise ValueError(f"retain must be >= 0, got {retain}")
-    with _maybe_writer_lock(spark, root):
+    with store.writer_lock(spark, root):
         rows = run_rows(spark, root)
         if not rows:
             return []

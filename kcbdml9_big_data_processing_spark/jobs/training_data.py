@@ -38,6 +38,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.text_quality import (
     contamination_flags,
     rarity_scores,
@@ -613,9 +614,7 @@ class TrainingDataCurator:
         # post-decision extend resolves fresh too; a rebuild committing
         # BETWEEN this run and that extend is two concurrent writers —
         # outside the single-writer-per-root contract.
-        from ..queries.similarity import _gen_current
-
-        dedup_index_path = _gen_current(spark, dedup_index_path, cached=False)
+        dedup_index_path = store.gen_current(spark, dedup_index_path, cached=False)
         q_pass, q_fail = self.quality_gate(batch, cleanup=cleanup)
 
         # exact: within-batch min-id canonical, then archive wins any

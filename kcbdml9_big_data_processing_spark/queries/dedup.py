@@ -32,9 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..sources.parquet import read_table
 from .registry import prepared_plan, register
-from .similarity import locked_writer
 
 #: id offset for the duplicated copy of the corpus
 _DUP_OFFSET = 10_000_000
@@ -517,9 +517,7 @@ def dedup_index_hashes_max(spark: SparkSession, path: str) -> int | None:
     is absent (index built before it existed — the precise-scan
     fallback applies). See :func:`_extend_hashes_max` for the crash
     posture."""
-    from .similarity import _gen_current
-
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     if not _dir_has_parquet(spark, f"{path}/hashes_max"):
         return None
     row = (
@@ -546,15 +544,13 @@ def dedup_index_hashes(spark: SparkSession, path: str) -> DataFrame | None:
     semi-join) and aggregates the batch-sized survivor set. Under the
     extend contract each hash appears once, so scan-level aggregates
     (the monotonic-id guard's max) are exact on the raw rows."""
-    from .similarity import _gen_current
-
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     if not _dir_has_parquet(spark, f"{path}/hashes"):
         return None
     return spark.read.schema(_HASHES_SCHEMA).parquet(f"{path}/hashes")
 
 
-@locked_writer
+@store.locked_writer
 def build_dedup_index(docs: DataFrame, path: str) -> None:
     """Materialize the standing corpus's near-dup index as two parquet
     tables under ``path``: ``stop`` (the over-df-cap shingle
@@ -586,16 +582,14 @@ def build_dedup_index(docs: DataFrame, path: str) -> None:
     previous generation fully current, a retry restages the same
     dir), and readers planned against the previous generation finish
     against its intact files (delete only via
-    similarity.vacuum_index_generations, retention-not-locking).
+    store.vacuum_index_generations, retention-not-locking).
     Every reader/extender resolves the root through the committed
     generation first; pre-generation indexes (no gen_meta) resolve to
     the root itself — fully backward compatible. Single writer per
-    root, as for the vector indexes (see similarity._GEN_CACHE)."""
-    from .similarity import _gen_begin, _gen_commit
-
+    root, as for the vector indexes (see store._GEN_CACHE)."""
     spark = docs.sparkSession
     root = path
-    gdir, v = _gen_begin(spark, root)
+    gdir, v = store.gen_begin(spark, root)
     prepped = shingle_docs(docs).persist()
     prepped.count()
     try:
@@ -634,12 +628,12 @@ def build_dedup_index(docs: DataFrame, path: str) -> None:
             .parquet(f"{gdir}/postings")
         )
         # COMMIT: the index flips to this generation atomically
-        _gen_commit(spark, root, gdir, v)
+        store.gen_commit(spark, root, gdir, v)
     finally:
         prepped.unpersist()
 
 
-@locked_writer
+@store.locked_writer
 def extend_dedup_index(new_docs: DataFrame, path: str) -> None:
     """Append newly-accepted documents to a persisted near-dup index
     WITHOUT rebuilding: shingle the batch, drop the STORED stop
@@ -675,10 +669,8 @@ def extend_dedup_index(new_docs: DataFrame, path: str) -> None:
     parquet append is committer-atomic per table; the ``hashes``
     append runs first because an extra hash row is inert (readers
     take min)."""
-    from .similarity import _gen_current
-
     spark = new_docs.sparkSession
-    path = _gen_current(spark, path, cached=False)
+    path = store.gen_current(spark, path, cached=False)
     if _dir_has_parquet(spark, f"{path}/hashes"):
         # sidecar BEFORE the map: a crash between the two appends can
         # only overstate the recorded max (costing the retry a precise
@@ -704,7 +696,7 @@ def extend_dedup_index(new_docs: DataFrame, path: str) -> None:
     )
 
 
-@locked_writer
+@store.locked_writer
 def compact_dedup_index(
     spark: SparkSession, path: str, n_buckets: int = 32, retain: int = 2
 ) -> None:
@@ -743,9 +735,7 @@ def compact_dedup_index(
     the current committed generation dir — its versioned base+tail
     and bucket_meta are per-generation; a rebuild starts the next
     generation fresh and unbucketed."""
-    from .similarity import _gen_current
-
-    path = _gen_current(spark, path, cached=False)
+    path = store.gen_current(spark, path, cached=False)
     meta = _bucket_meta(spark, path)
     post = spark.read.schema(_POSTINGS_SCHEMA).parquet(_tail_dir(meta, path))
     version = 1
@@ -759,7 +749,7 @@ def compact_dedup_index(
         post = spark.read.parquet(meta["dir"]).unionByName(post)
     new_dir = f"{path}/postings_bucketed_v{version}"
     new_tail = f"{path}/postings_tail_v{version}"
-    tbl = _bucketed_table_name(path)
+    tbl = store.bucketed_table_name(path)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     (
         post.write.bucketBy(n_buckets, "k")
@@ -776,9 +766,10 @@ def compact_dedup_index(
         "overwrite"
     ).parquet(new_tail)
     # COMMIT: one appended meta row flips readers to (new_dir, new_tail)
-    spark.createDataFrame(
-        [(n_buckets, new_dir, version, new_tail)], _META_SCHEMA
-    ).write.mode("append").parquet(f"{path}/bucket_meta")
+    store.meta_append(
+        spark, f"{path}/bucket_meta", _META_SCHEMA,
+        (n_buckets, new_dir, version, new_tail),
+    )
     spark.catalog.refreshByPath(new_tail)
     # the undecorated impl: compact already holds the ROOT writer
     # lock; the decorated public vacuum would key a SECOND lock on the
@@ -788,7 +779,7 @@ def compact_dedup_index(
     _vacuum_dedup_index_impl(spark, path, retain=retain)
 
 
-@locked_writer
+@store.locked_writer
 def vacuum_dedup_index(spark: SparkSession, path: str, retain: int = 2) -> None:
     """Delete superseded index generations, keeping the ``retain``
     most recent (current included). The un-versioned ``postings`` dir
@@ -800,16 +791,14 @@ def vacuum_dedup_index(spark: SparkSession, path: str, retain: int = 2) -> None:
     Meta rows are never pruned: they are one skinny row per
     compaction and the max-version read ignores stale ones. Whole
     superseded BUILD generations are vacuumed separately by
-    similarity.vacuum_index_generations."""
+    store.vacuum_index_generations."""
     _vacuum_dedup_index_impl(spark, path, retain=retain)
 
 
 def _vacuum_dedup_index_impl(
     spark: SparkSession, path: str, retain: int = 2
 ) -> None:
-    from .similarity import _gen_current
-
-    path = _gen_current(spark, path, cached=False)
+    path = store.gen_current(spark, path, cached=False)
     meta = _bucket_meta(spark, path)
     if meta is None:
         return
@@ -832,29 +821,19 @@ def _vacuum_dedup_index_impl(
             fs.delete(status.getPath(), True)
 
 
-def _bucketed_table_name(path: str) -> str:
-    import hashlib
-
-    return "kcbdml9_dedup_idx_" + hashlib.sha256(path.encode()).hexdigest()[:12]
-
-
 _META_SCHEMA = "n_buckets int, dir string, version int, tail string"
 
 
 def _bucket_meta(spark: SparkSession, path: str) -> dict | None:
     """Current (max-version) bucket_meta row, or None if the index was
-    never compacted. Explicit read schema so rows written before the
-    ``tail`` column existed surface it as NULL (resolved to the
-    un-versioned dir by :func:`_tail_dir`)."""
-    try:
-        row = (
-            spark.read.schema(_META_SCHEMA)
-            .parquet(f"{path}/bucket_meta")
-            .orderBy(F.col("version").desc())
-            .first()
-        )
-    except Exception:
-        return None
+    never compacted (no sidecar — an FS check). A read error
+    propagates: misread as "never compacted", it would send extends
+    into the plain ``postings`` dir searches no longer read and make
+    a compaction rewrite ``postings_bucketed_v1``. Explicit read
+    schema so rows written before the ``tail`` column existed surface
+    it as NULL (resolved to the un-versioned dir by
+    :func:`_tail_dir`)."""
+    row = store.meta_latest(spark, f"{path}/bucket_meta", _META_SCHEMA)
     return None if row is None else row.asDict()
 
 
@@ -881,7 +860,7 @@ def _bucketed_postings(
         meta = _bucket_meta(spark, path)
     if meta is None:
         return None
-    tbl = _bucketed_table_name(path)
+    tbl = store.bucketed_table_name(path)
     if spark.catalog.tableExists(tbl):
         loc = (
             spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}")
@@ -944,9 +923,7 @@ def dedup_against_index(
     append tail joins as a (small) third branch. Counts stay complete
     per branch: a corpus doc's postings live entirely in the base or
     entirely in the tail (extends append whole documents)."""
-    from .similarity import _gen_current
-
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     threshold = _JACCARD_MIN if jaccard_min is None else jaccard_min
     stop_arr = (
         spark.read.schema(_STOP_SCHEMA)

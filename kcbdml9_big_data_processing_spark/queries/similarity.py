@@ -17,19 +17,16 @@ probes), LSH is the linear-scan path (signature per row, shuffle on
 
 from __future__ import annotations
 
-import functools
 import hashlib
-import inspect
-import threading
-import time
-import uuid
-import warnings
-from contextlib import contextmanager
+import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import store
+from ..fs import exists
 from ..sources.parquet import read_table
+from ..tmpdirs import scratch_dir
 from .registry import prepared_plan, register
 
 _DIM = 64
@@ -443,449 +440,10 @@ def _ensure_index(kind: str, emb: DataFrame, sf_dir: str, build_fn) -> str:
     key = (kind, sf_dir)
     path = _INDEX_PATHS.get(key)
     if path is None:
-        from ..tmpdirs import scratch_dir
-
         path = scratch_dir(f"{kind}_index_")
         build_fn(emb, path)
         _INDEX_PATHS[key] = path
     return path
-
-
-# --- crash-safe index generations (r10, verdict #5) -----------------------
-#
-# build_ivf/pq/semantic_index previously wrote their tables with
-# mode("overwrite") directly under the index root — on a LIVE index a
-# rebuild that crashed mid-overwrite (Spark deletes the target dir
-# before writing) left a truncated index with no previous generation.
-# Same failure the ngram family's compaction solved in r8, same cure:
-# builds write a fresh VERSIONED generation dir (``{root}/g{N}``) and
-# the SINGLE commit point is a row appended to the ``gen_meta``
-# sidecar (readers take the max-version row; the parquet committer's
-# rename makes a half-written row invisible). A crash anywhere before
-# the commit leaves the previous generation — including its
-# post-build extends, which append INTO the committed generation —
-# fully live; a build retry rewrites the same staging dir. Extends
-# stay append-only within the current generation (each table append
-# is committer-atomic; a crash between the vecs and bands appends of
-# extend_semantic_index can orphan rows of the FIRST table, which is
-# why it appends vecs first — an unreferenced vec row is inert,
-# whereas a bands row without its vec would silently drop candidate
-# pairs; re-running a half-applied extend requires a rebuild, see the
-# extend docstring). Indexes written before r10 (no gen_meta) read as
-# generation 0 at the root — fully backward compatible.
-#
-# At 100 TB this is the standard object-store table-format recipe
-# (versioned data dirs + tiny committed metadata as the atomicity
-# point); the Hadoop FileSystem API below works unchanged on HDFS/S3A.
-
-_GEN_META_SCHEMA = "dir string, version int"
-
-#: per-process cache of resolved current-generation dirs, keyed by
-#: (applicationId, index root). _gen_commit updates it, so rebuilds
-#: within one process are seen immediately; concurrent cross-process
-#: READERS coordinate via gen_meta itself (max-version read), and a
-#: process that cached generation N keeps serving N until its next
-#: build — the same retention-not-locking posture as
-#: vacuum_dedup_index.
-#:
-#: Writer contract (ADVICE r10): ONE writer per index root at a time.
-#: The generation layer gives crash-atomicity, not writer mutual
-#: exclusion — two concurrent builds would compute the same next
-#: version in _gen_begin, interleave writes into the same g{N}
-#: staging dir, and both append gen_meta rows, so the committed
-#: generation could mix files from both builds. Production index
-#: maintenance is a scheduled single job per index (the same posture
-#: as compact_dedup_index). A deployment that can't guarantee that can
-#: ENFORCE the contract with the opt-in writer lock below
-#: (enable_index_writer_locking): every build/extend/compact/vacuum
-#: across every family then holds {root}/_writer.lock for the write
-#: and a concurrent second writer raises IndexWriterLockError.
-_GEN_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _gen_meta_row(spark: SparkSession, path: str):
-    """Newest committed gen_meta row, or None when the sidecar does
-    not exist (legacy flat or not-yet-built root). Absence is decided
-    by a driver-side FS existence check, NOT by catching the read
-    error (ADVICE r10): a transient read failure now propagates
-    instead of misclassifying a generational index as legacy — which
-    _gen_current would then cache as the root path for the process
-    lifetime, quietly serving stale pre-migration tables. An existing
-    but empty sidecar (nothing ever committed) reads as None through
-    the explicit schema, which is the correct legacy answer."""
-    from ..fs import hadoop_path
-
-    meta_dir = f"{path}/gen_meta"
-    p, fs = hadoop_path(spark, meta_dir)
-    if not fs.exists(p):
-        return None
-    return (
-        spark.read.schema(_GEN_META_SCHEMA)
-        .parquet(meta_dir)
-        .orderBy(F.col("version").desc())
-        .first()
-    )
-
-
-def _gen_current(spark: SparkSession, path: str, cached: bool = True) -> str:
-    """The current committed generation dir of an index root —
-    ``{path}/g{N}`` for the max committed N, or ``path`` itself for a
-    legacy flat (pre-r10) or not-yet-built index.
-
-    ``cached=False`` re-reads gen_meta — for WRITERS (extend, compact,
-    vacuum): a long-lived worker holding the process cache must not
-    keep appending into a generation another process's rebuild has
-    superseded (r11 review — the appends would land in a dir the next
-    generation-vacuum deletes). Readers keep the cache: serving the
-    generation they planned against until their next resolution is
-    exactly the retention posture vacuum assumes."""
-    key = (spark.sparkContext.applicationId, path)
-    if cached:
-        hit = _GEN_CACHE.get(key)
-        if hit is not None:
-            return hit
-    row = _gen_meta_row(spark, path)
-    cur = path if row is None else row["dir"]
-    _GEN_CACHE[key] = cur
-    return cur
-
-
-def _gen_begin(spark: SparkSession, path: str) -> tuple[str, int]:
-    """Staging dir + version for a new build. Reads gen_meta directly
-    (not the cache): a crashed build's staging dir is re-used by the
-    retry, because the version after the last COMMITTED one is the
-    same both times. Single-writer-per-root assumed (see _GEN_CACHE
-    note): a concurrent second builder would stage into the SAME
-    dir."""
-    row = _gen_meta_row(spark, path)
-    v = 1 if row is None else row["version"] + 1
-    return f"{path}/g{v}", v
-
-
-def _gen_commit(spark: SparkSession, path: str, gdir: str, version: int) -> None:
-    spark.createDataFrame([(gdir, version)], _GEN_META_SCHEMA).write.mode(
-        "append"
-    ).parquet(f"{path}/gen_meta")
-    _GEN_CACHE[(spark.sparkContext.applicationId, path)] = gdir
-
-
-# --- opt-in writer mutual exclusion (r11 verdict #4) -----------------------
-
-
-class IndexWriterLockError(RuntimeError):
-    """A second writer attempted build/extend/compact/vacuum on an
-    index root whose ``_writer.lock`` is held and not expired."""
-
-
-#: writer-lock TTL in seconds; None (default) disables locking — the
-#: single-writer-per-root CONTRACT above stands either way, this layer
-#: merely enforces it for deployments that can't schedule one job per
-#: index. Module-global on purpose: the lock is deployment posture,
-#: not per-call policy.
-_WRITER_LOCK_TTL: float | None = None
-
-#: locks held by THIS process, keyed by (applicationId, root,
-#: thread id) — nested writer calls on the same root in the SAME
-#: thread re-enter instead of self-deadlocking (only the outermost
-#: frame, the one that inserted the key, releases), while a SECOND
-#: thread of the same application misses the key, hits the fresh lock
-#: file, and raises like any foreign contender (r12 ADVICE: the old
-#: (app, root) keying let two same-process threads both enter as
-#: "reentrant" and the first to exit delete the lock under the
-#: other). Value is the uuid token written INTO the lock file at
-#: acquire; release compares file CONTENT, not mtime, so a TTL steal
-#: followed by a re-acquire inside one filesystem mtime tick (HDFS:
-#: 1 s granularity) can never trick the original holder's release
-#: into deleting the new holder's lock (r12 verdict #2).
-_HELD_LOCKS: dict[tuple[str, str, int], str] = {}
-
-#: filesystem schemes whose create-if-absent is NOT atomic — object
-#: stores where createNewFile degrades to read-then-write, so the
-#: "enforced" mutual exclusion silently becomes advisory (r12
-#: ADVICE). Warn once per scheme instead of refusing: advisory
-#: locking still narrows the interleaving window and the documented
-#: single-writer contract stands either way.
-_NON_ATOMIC_CREATE_SCHEMES = frozenset(
-    {"s3", "s3a", "s3n", "gs", "gcs", "wasb", "wasbs", "abfs", "abfss", "oss", "cos", "swift"}
-)
-_WARNED_SCHEMES: set[str] = set()
-
-
-def enable_index_writer_locking(ttl_sec: float = 3600.0) -> None:
-    """Turn on writer mutual exclusion for every index family's
-    build/extend/compact/vacuum: the writer creates
-    ``{root}/_writer.lock`` atomically (Hadoop createNewFile) for the
-    duration of the write; a concurrent second writer raises
-    :class:`IndexWriterLockError` instead of interleaving into the
-    same staging generation. A lock older than ``ttl_sec`` (a crashed
-    writer — release is in a finally, so only a killed process leaves
-    one) is stolen; size the TTL comfortably above the longest
-    build. The steal is an atomic rename to a unique tombstone
-    (exactly one contender wins), and :func:`force_unlock_index` is
-    the manual override. ``ttl_sec`` must be positive: 0 or negative
-    would make EVERY held lock instantly stale, turning enforcement
-    into steal-anything — no mutual exclusion at all (r12 review).
-
-    Holder identity is a uuid written INTO the lock file; release
-    deletes only a content-matching lock, so a steal + re-acquire
-    landing inside one filesystem mtime tick can't lose exclusion.
-    Reentrancy is per (application, root, THREAD): a writer composed
-    of writers re-enters, a second thread of the same application
-    contends like a foreign process. Enforcement requires an
-    atomic create-if-absent filesystem (HDFS, local); on object
-    stores (s3a/gs/abfs/...) the layer degrades to ADVISORY and
-    warns once per scheme."""
-    if ttl_sec <= 0:
-        raise ValueError(
-            f"ttl_sec must be > 0 (got {ttl_sec}); a non-positive ttl"
-            " makes every held lock stealable, i.e. no mutual"
-            " exclusion — use disable_index_writer_locking() to turn"
-            " locking off"
-        )
-    global _WRITER_LOCK_TTL
-    _WRITER_LOCK_TTL = float(ttl_sec)
-
-
-def disable_index_writer_locking() -> None:
-    global _WRITER_LOCK_TTL
-    _WRITER_LOCK_TTL = None
-
-
-@contextmanager
-def scoped_writer_lock_ttl(ttl_sec: float | None):
-    """Invocation-scoped enablement: snapshot the process-global
-    toggle, enable for the block, RESTORE the host's prior setting on
-    exit — success or failure (r12 review: an unconditional disable
-    clobbered a notebook's own enablement). ``None`` is a no-op, so
-    CLI verbs can wrap their whole body unconditionally. One shared
-    definition because two hand-maintained copies of this
-    capture/enable/restore dance had already diverged once (r13
-    review)."""
-    if ttl_sec is None:
-        yield
-        return
-    prev = _WRITER_LOCK_TTL
-    try:
-        enable_index_writer_locking(ttl_sec=ttl_sec)
-        yield
-    finally:
-        if prev is None:
-            disable_index_writer_locking()
-        else:
-            enable_index_writer_locking(ttl_sec=prev)
-
-
-def _lock_handles(spark: SparkSession, root: str):
-    from ..fs import hadoop_path
-
-    p, fs = hadoop_path(spark, f"{root}/_writer.lock")
-    return fs, p
-
-
-def force_unlock_index(spark: SparkSession, root: str) -> None:
-    """Delete a stale ``_writer.lock`` (crashed writer) without
-    waiting for the TTL. Operator action — never called by the
-    writers themselves."""
-    fs, p = _lock_handles(spark, root)
-    if fs.exists(p):
-        fs.delete(p, False)
-
-
-def _read_lock_token(fs, p) -> str | None:
-    """Content token written at acquire; None when the file is
-    missing, empty (a foreign/manual lock), or unreadable — all of
-    which mean "not ours", so release leaves the file alone."""
-    try:
-        stream = fs.open(p)
-        try:
-            return stream.readUTF()
-        finally:
-            stream.close()
-    except Exception:
-        return None
-
-
-def _write_lock_token(fs, p, token: str) -> None:
-    # overwrite of a path THIS writer already owns (createNewFile won
-    # the atomic acquire a moment ago; a fresh file is never stolen)
-    out = fs.create(p, True)
-    try:
-        out.writeUTF(token)
-    finally:
-        out.close()
-
-
-@contextmanager
-def _maybe_writer_lock(spark: SparkSession, root: str):
-    """Hold the writer lock for the duration of a write when locking
-    is enabled; no-op (the r11 documented-contract posture) when not.
-    Reentrant per (applicationId, root, thread): a writer composed of
-    writers can't self-deadlock, while a second THREAD of the same
-    application contends like a foreign process (fresh lock file →
-    IndexWriterLockError). Identity is the uuid token written into
-    the lock file at acquire; release deletes the file only when its
-    CONTENT still matches (a TTL-stealer's replacement is left alone
-    even when the steal + re-acquire landed inside one mtime tick —
-    mtime comparison lost that case on coarse-granularity
-    filesystems, e.g. HDFS's 1 s ticks)."""
-    if _WRITER_LOCK_TTL is None:
-        yield
-        return
-    key = (spark.sparkContext.applicationId, root, threading.get_ident())
-    if key in _HELD_LOCKS:
-        yield
-        return
-    fs, p = _lock_handles(spark, root)
-    scheme = p.toUri().getScheme()
-    if scheme in _NON_ATOMIC_CREATE_SCHEMES and scheme not in _WARNED_SCHEMES:
-        _WARNED_SCHEMES.add(scheme)
-        warnings.warn(
-            f"index writer locking on {scheme}:// is ADVISORY only:"
-            " create-if-absent is not atomic on object stores, so two"
-            " simultaneous writers can both acquire. Enforcement"
-            " requires an atomic-create filesystem (HDFS, local)."
-            " Keep the single-writer-per-root scheduling contract.",
-            stacklevel=3,
-        )
-    parent = p.getParent()
-    if parent is not None:
-        fs.mkdirs(parent)
-    if not fs.createNewFile(p):
-        st = fs.getFileStatus(p) if fs.exists(p) else None
-        age = (
-            None
-            if st is None
-            else time.time() * 1000.0 - st.getModificationTime()
-        )
-        if age is not None and age <= _WRITER_LOCK_TTL * 1000.0:
-            raise IndexWriterLockError(
-                f"index root {root} is locked by another writer"
-                f" (_writer.lock age {age / 1000.0:.0f}s,"
-                f" ttl {_WRITER_LOCK_TTL:.0f}s); wait for it, raise the"
-                " ttl, or force_unlock_index() if the holder crashed"
-            )
-        if st is not None:
-            # steal ATOMICALLY via rename to a unique tombstone (r12
-            # review: a delete+create steal let two concurrent
-            # stealers both acquire — stealer B's delete removed
-            # stealer A's FRESH lock). rename succeeds for exactly one
-            # stealer; the loser raises instead of entering.
-            jvm = spark._jvm
-            tomb = jvm.org.apache.hadoop.fs.Path(
-                f"{root}/_writer.lock.steal.{uuid.uuid4().hex}"
-            )
-            if not fs.rename(p, tomb):
-                raise IndexWriterLockError(
-                    f"index root {root}: lost the stale-lock steal race"
-                )
-            fs.delete(tomb, False)
-        if not fs.createNewFile(p):
-            raise IndexWriterLockError(
-                f"index root {root}: another writer acquired the lock"
-                " during the steal"
-            )
-    token = uuid.uuid4().hex
-    _write_lock_token(fs, p, token)
-    _HELD_LOCKS[key] = token
-    try:
-        yield
-    finally:
-        _HELD_LOCKS.pop(key, None)
-        if fs.exists(p) and _read_lock_token(fs, p) == token:
-            fs.delete(p, False)
-
-
-def locked_writer(fn):
-    """Decorate an index WRITER (any function taking the index root as
-    ``path``) with the opt-in mutual exclusion above. The Spark
-    session comes from a ``spark`` parameter when the writer has one,
-    else from its first DataFrame argument."""
-    sig = inspect.signature(fn)
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        bound = sig.bind(*args, **kwargs)
-        root = bound.arguments["path"]
-        spark = bound.arguments.get("spark")
-        if spark is None:
-            spark = next(iter(bound.arguments.values())).sparkSession
-        with _maybe_writer_lock(spark, root):
-            return fn(*args, **kwargs)
-
-    return wrapper
-
-
-#: root-level artifact dirs a pre-generation (legacy flat) index may
-#: carry, across every family — what ``drop_legacy_root`` reclaims.
-_LEGACY_ARTIFACT_RE = (
-    r"hashes|hashes_max|stop|postings|postings_(?:bucketed|tail)_v\d+"
-    r"|bucket_meta|centroids|cells|book|codes|vecs|bands|meta|cents"
-)
-
-
-@locked_writer
-def vacuum_index_generations(
-    spark: SparkSession, path: str, retain: int = 2, drop_legacy_root: bool = False
-) -> None:
-    """Delete superseded index generations, keeping the ``retain``
-    most recent (current included) — the generational sibling of
-    vacuum_dedup_index (which prunes compaction dirs INSIDE a
-    generation), with the same retention-not-locking safety: a reader
-    planned against generation N survives the rebuild that commits
-    N+1, and N's dir is deleted only once N+retain exists. Meta rows
-    are never pruned (one skinny row per rebuild; the max-version
-    read ignores stale ones).
-
-    r11: deleting a generation also drops the ngram family's
-    per-generation bucketed catalog table (compact_dedup_index
-    registers one per generation dir — without the drop, a persistent
-    metastore leaks a stale table pointing at a deleted location per
-    rebuild+compact cycle).
-
-    A legacy flat layout at the root is left untouched by default —
-    after the first generational rebuild over a pre-r11 root those
-    files are superseded but nothing references them, and at corpus
-    scale they are the largest artifact on disk. Pass
-    ``drop_legacy_root=True`` to reclaim them (deletes the known
-    artifact dirs listed in _LEGACY_ARTIFACT_RE and drops the legacy
-    root's bucketed table; only acts when a committed generation
-    exists, so a pure legacy index can never delete itself). Unlike
-    g{N} dirs, the legacy root gets NO automatic retention window —
-    the operator supplies it: run the flag one maintenance cycle
-    AFTER the first generational rebuild, once every long-lived
-    process has re-resolved (a process still cached on the root would
-    lose its files mid-plan, r11 review)."""
-    row = _gen_meta_row(spark, path)
-    if row is None:
-        return
-    cutoff = row["version"] - retain + 1
-    import re
-
-    from .dedup import _bucketed_table_name
-
-    from ..fs import hadoop_path
-
-    root_p, fs = hadoop_path(spark, path)
-    for status in fs.listStatus(root_p):
-        name = status.getPath().getName()
-        m = re.fullmatch(r"g(\d+)", name)
-        doomed = m is not None and int(m.group(1)) < cutoff
-        if drop_legacy_root and re.fullmatch(_LEGACY_ARTIFACT_RE, name):
-            doomed = True
-        if doomed:
-            # table names hash the PATH STRING compact registered —
-            # which was built as f"{root}/g{N}" from the caller's own
-            # root string. Reconstruct it the same way rather than
-            # from the Hadoop URI (toUri().getPath() strips scheme and
-            # absolutizes, so it mismatches s3a:// or relative roots —
-            # r11 review).
-            tbl = _bucketed_table_name(f"{path}/{name}")
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            fs.delete(status.getPath(), True)
-    if drop_legacy_root:
-        # the legacy root's own bucketed table (if it was compacted
-        # pre-generations) hashes the ROOT path
-        spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
 
 
 def ivf_ann_cosine(
@@ -1160,22 +718,23 @@ _SEM_CENT_ROWS_CACHE: dict[str, list | None] = {}
 
 def _sem_meta(spark: SparkSession, path: str) -> dict:
     """Stored blocking policy of a semantic index; indexes written
-    before the policy existed read as plain label blocking. Resolves
+    before the policy existed (no ``meta`` dir, an FS check) read as
+    plain label blocking. A read error propagates and is never cached:
+    defaulting a ``label_ivf`` index to label blocking would search it
+    with the wrong blocking and silently drop candidate pairs. Resolves
     the current generation first, so the cache key is the generation
     dir — a rebuild changes the key and the stale entry is never
     consulted (idempotent when handed an already-resolved dir)."""
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     cached = _SEM_META_CACHE.get(path)
     if cached is not None:
         return cached
-    try:
-        row = (
-            spark.read.schema(_SEM_META_SCHEMA)
-            .parquet(f"{path}/meta")
-            .first()
-        )
-    except Exception:
-        row = None
+    meta_dir = f"{path}/meta"
+    row = (
+        spark.read.schema(_SEM_META_SCHEMA).parquet(meta_dir).first()
+        if exists(spark, meta_dir)
+        else None
+    )
     meta = (
         {"blocking": "label", "n_cells": None} if row is None else row.asDict()
     )
@@ -1190,7 +749,7 @@ def _sem_cent_rows(spark: SparkSession, path: str, meta: dict) -> list | None:
     via the exploded join)."""
     if meta["blocking"] != "label_ivf":
         return None
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     if path in _SEM_CENT_ROWS_CACHE:
         return _SEM_CENT_ROWS_CACHE[path]
     n = meta.get("n_cells")
@@ -1205,7 +764,7 @@ def _sem_cent_rows(spark: SparkSession, path: str, meta: dict) -> list | None:
 
 def _sem_cents(spark: SparkSession, path: str, meta: dict) -> DataFrame | None:
     return (
-        spark.read.parquet(f"{_gen_current(spark, path)}/cents")
+        spark.read.parquet(f"{store.gen_current(spark, path)}/cents")
         if meta["blocking"] == "label_ivf"
         else None
     )
@@ -1337,7 +896,7 @@ def _sem_train(corpus: DataFrame, k: int) -> DataFrame:
     )
 
 
-@locked_writer
+@store.locked_writer
 def build_semantic_index(
     corpus: DataFrame,
     path: str,
@@ -1421,13 +980,11 @@ def build_semantic_index(
             blocking = "label"
     # crash-safe (r10): all four tables land in a fresh generation
     # dir; the index goes live only at the single gen_meta commit at
-    # the end — see the generation-layer comment above _gen_current
+    # the end — see store.py
     root, path = path, None
-    gdir, v = _gen_begin(spark, root)
+    gdir, v = store.gen_begin(spark, root)
     if blocking == "label_ivf":
         if n_cells is None:
-            import math
-
             n_cells = max(_IVF_K, math.ceil(corpus_n / target_cell_pop))
         cents = _sem_train(corpus, n_cells)
         cents.write.mode("overwrite").parquet(f"{gdir}/cents")
@@ -1477,10 +1034,10 @@ def build_semantic_index(
         )
     finally:
         prepped.unpersist()
-    _gen_commit(spark, root, gdir, v)
+    store.gen_commit(spark, root, gdir, v)
 
 
-@locked_writer
+@store.locked_writer
 def extend_semantic_index(new_corpus: DataFrame, path: str) -> None:
     """Append newly-accepted vectors to a persisted semantic index:
     same deterministic planes, and — under ``label_ivf`` blocking —
@@ -1495,7 +1052,7 @@ def extend_semantic_index(new_corpus: DataFrame, path: str) -> None:
     re-run, would duplicate vec rows — rebuild (build_semantic_index)
     instead, exactly as for a lost batch."""
     spark = new_corpus.sparkSession
-    path = _gen_current(spark, path, cached=False)
+    path = store.gen_current(spark, path, cached=False)
     new_corpus = _block_label_for_index(spark, path, new_corpus)
     planes = _planes()
     band_w = _N_PLANES // _N_BANDS
@@ -1559,7 +1116,7 @@ def semantic_dedup_against_index(
     semi-join key set, the verification union); it is persisted only
     when a ``cleanup`` list is passed (the module convention — see
     repeated_spans), staying fully lazy otherwise."""
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     batch = _block_label_for_index(spark, path, batch)
     planes = _planes()
     band_w = _N_PLANES // _N_BANDS
@@ -1672,8 +1229,6 @@ def _stored_near_dup_prepped(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     path = _NEAR_DUP_PREPPED_STORE.get(key)
     if path is None:
-        from ..tmpdirs import scratch_dir
-
         emb = read_table(spark, sf_dir, "embeddings")
         base = emb.select(
             "vec_id",
@@ -2232,7 +1787,7 @@ def _pq_adc_rerank(
     )
 
 
-@locked_writer
+@store.locked_writer
 def build_pq_index(emb: DataFrame, path: str) -> None:
     """Materialize the PQ index as two parquet tables under ``path``:
     ``book`` (m, code, j, c — the codebooks, KxMxsubdim rows, tiny)
@@ -2244,10 +1799,9 @@ def build_pq_index(emb: DataFrame, path: str) -> None:
     of magnitude smaller than the embeddings it indexes.
 
     Crash-safe (r10): tables land in a fresh generation dir, made
-    live by the single gen_meta commit — see the generation-layer
-    comment above _gen_current."""
+    live by the single gen_meta commit (store.py)."""
     spark = emb.sparkSession
-    gdir, v = _gen_begin(spark, path)
+    gdir, v = store.gen_begin(spark, path)
     ex = _pq_explode(emb)
     book = _pq_train(emb, ex)
     book.write.mode("overwrite").parquet(f"{gdir}/book")
@@ -2260,7 +1814,7 @@ def build_pq_index(emb: DataFrame, path: str) -> None:
         .write.mode("overwrite")
         .parquet(f"{gdir}/codes")
     )
-    _gen_commit(spark, path, gdir, v)
+    store.gen_commit(spark, path, gdir, v)
 
 
 def search_pq_index(
@@ -2271,7 +1825,7 @@ def search_pq_index(
     codebooks, ADC over the stored codes, exact re-rank against
     ``corpus`` (vec_id, embedding). Identical results to the inline
     query for the same probe set — pinned in tests/test_llm_ops.py."""
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     book = spark.read.parquet(f"{path}/book")
     codes = spark.read.parquet(f"{path}/codes")
     probe_ex = _pq_explode(probes)
@@ -2286,7 +1840,7 @@ def search_pq_index(
     return _pq_adc_rerank(codes, lut, full)
 
 
-@locked_writer
+@store.locked_writer
 def build_ivf_index(emb: DataFrame, path: str) -> None:
     """Materialize the IVF index as two parquet tables under ``path``:
     ``centroids`` (cell, i, c — K x dim rows, tiny) and ``cells``
@@ -2299,10 +1853,9 @@ def build_ivf_index(emb: DataFrame, path: str) -> None:
     amortization.
 
     Crash-safe (r10): tables land in a fresh generation dir, made
-    live by the single gen_meta commit — see the generation-layer
-    comment above _gen_current."""
+    live by the single gen_meta commit (store.py)."""
     spark = emb.sparkSession
-    gdir, v = _gen_begin(spark, path)
+    gdir, v = store.gen_begin(spark, path)
     ex = _ivf_explode(emb)
     cents = _ivf_train(emb, ex)
     cents.write.mode("overwrite").parquet(f"{gdir}/centroids")
@@ -2318,7 +1871,7 @@ def build_ivf_index(emb: DataFrame, path: str) -> None:
         .write.mode("overwrite")
         .parquet(f"{gdir}/cells")
     )
-    _gen_commit(spark, path, gdir, v)
+    store.gen_commit(spark, path, gdir, v)
 
 
 def search_ivf_index(
@@ -2331,7 +1884,7 @@ def search_ivf_index(
     candidates. Identical results to the inline ivf_ann_cosine query
     for the same probe set (same arithmetic, same tie-breaks) —
     pinned in tests/test_llm_ops.py."""
-    path = _gen_current(spark, path)
+    path = store.gen_current(spark, path)
     cents = spark.read.parquet(f"{path}/centroids")
     cells = spark.read.parquet(f"{path}/cells")
     d = _sqdist_cells(_ivf_explode(probes), cents)
@@ -2398,8 +1951,8 @@ def search_ivfpq_index(
     the probed cells (recall floor pinned in tests/test_llm_ops.py).
     Both indexes must be built over the same corpus (build_ivf_index /
     build_pq_index)."""
-    ivf_path = _gen_current(spark, ivf_path)
-    pq_path = _gen_current(spark, pq_path)
+    ivf_path = store.gen_current(spark, ivf_path)
+    pq_path = store.gen_current(spark, pq_path)
     cents = spark.read.parquet(f"{ivf_path}/centroids")
     cells = spark.read.parquet(f"{ivf_path}/cells")
     book = spark.read.parquet(f"{pq_path}/book")
@@ -2471,7 +2024,7 @@ def search_ivfpq_index(
     )
 
 
-@locked_writer
+@store.locked_writer
 def extend_pq_index(new_emb: DataFrame, path: str) -> None:
     """Append newly-ingested vectors' codes to a persisted PQ index
     WITHOUT retraining: quantize each new vector's subvectors against
@@ -2488,7 +2041,7 @@ def extend_pq_index(new_emb: DataFrame, path: str) -> None:
     argmin assignment under the stored book, extension is
     batch-split invariant, and searches see the new vectors."""
     spark = new_emb.sparkSession
-    path = _gen_current(spark, path, cached=False)
+    path = store.gen_current(spark, path, cached=False)
     book = spark.read.parquet(f"{path}/book")
     codes = _pq_assign(_pq_explode(new_emb), book)
     w = Window.partitionBy("vec_id", "m").orderBy("dist_f", "code")
@@ -2501,7 +2054,7 @@ def extend_pq_index(new_emb: DataFrame, path: str) -> None:
     )
 
 
-@locked_writer
+@store.locked_writer
 def extend_ivf_index(new_emb: DataFrame, path: str) -> None:
     """Append newly-ingested vectors to a persisted IVF index WITHOUT
     retraining: assign each new vector to its nearest STORED centroid
@@ -2515,7 +2068,7 @@ def extend_ivf_index(new_emb: DataFrame, path: str) -> None:
     answer probes identically) and the appended rows are exactly the
     argmin assignment against the stored centroids."""
     spark = new_emb.sparkSession
-    path = _gen_current(spark, path, cached=False)
+    path = store.gen_current(spark, path, cached=False)
     stored = spark.read.parquet(f"{path}/centroids")
     d = _sqdist_cells(_ivf_explode(new_emb), stored)
     w = Window.partitionBy("vec_id").orderBy("dist_f", "cell")

@@ -460,12 +460,12 @@ def test_ivf_index_incremental_extend(spark, tmp_path):
     }
     assert got_one == got_two and len(got_one) > 0
 
-    from kcbdml9_big_data_processing_spark.queries.similarity import _gen_current
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
-    cells = spark.read.parquet(f"{_gen_current(spark, one)}/cells")
+    cells = spark.read.parquet(f"{gen_current(spark, one)}/cells")
     assert cells.count() == emb.count()
     assert cells.select("vec_id").distinct().count() == emb.count()
-    stored = spark.read.parquet(f"{_gen_current(spark, one)}/centroids")
+    stored = spark.read.parquet(f"{gen_current(spark, one)}/centroids")
     want_b = {
         (r["vec_id"], r["cell"])
         for r in _argmin_cell(_ivf_explode(b), stored)
@@ -587,12 +587,12 @@ def test_ivfpq_composed_search(spark, tmp_path):
     assert len(got) > 0
 
     # (1) cell restriction holds against the stored cell table
-    from kcbdml9_big_data_processing_spark.queries.similarity import _gen_current
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
     cells = {
         r.vec_id: r.cell
         for r in spark.read.parquet(
-            f"{_gen_current(spark, ivf_path)}/cells"
+            f"{gen_current(spark, ivf_path)}/cells"
         ).collect()
     }
     from collections import defaultdict
@@ -799,11 +799,9 @@ def test_dedup_index_compaction_bucketed_base(spark, tmp_path):
     build_dedup_index(archive, path)
     # white-box internals below read fixed paths — resolve the build's
     # committed generation dir once (r11 generational builds)
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
-    path = _gen_current(spark, path)
+    path = gen_current(spark, path)
 
     def results(batch):
         return {
@@ -873,8 +871,8 @@ def test_dedup_index_compaction_bucketed_base(spark, tmp_path):
         # (1a) fresh-session simulation: drop the catalog entry (a new
         # session has never seen it) — the search must re-register the
         # bucketed table from the bucket_meta sidecar and still match
-        from kcbdml9_big_data_processing_spark.queries.dedup import (
-            _bucketed_table_name as _tbl_name,
+        from kcbdml9_big_data_processing_spark.store import (
+            bucketed_table_name as _tbl_name,
         )
 
         spark.sql(f"DROP TABLE IF EXISTS {_tbl_name(path)}")
@@ -888,11 +886,9 @@ def test_dedup_index_compaction_bucketed_base(spark, tmp_path):
         compact_dedup_index(spark, path, n_buckets=4)
         assert results(batch2) == after_extend
     finally:
-        from kcbdml9_big_data_processing_spark.queries.dedup import (
-            _bucketed_table_name,
-        )
+        from kcbdml9_big_data_processing_spark.store import bucketed_table_name
 
-        spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
+        spark.sql(f"DROP TABLE IF EXISTS {bucketed_table_name(path)}")
 
 
 def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
@@ -917,13 +913,13 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
 
     from kcbdml9_big_data_processing_spark.queries.dedup import (
         _bucket_meta,
-        _bucketed_table_name,
         build_dedup_index,
         compact_dedup_index,
         dedup_against_index,
         extend_dedup_index,
     )
     from kcbdml9_big_data_processing_spark.sources.parquet import read_table
+    from kcbdml9_big_data_processing_spark.store import bucketed_table_name
 
     sf = "/root/testdata/sf0.001"
     docs = read_table(spark, sf, "documents").select("doc_id", "text")
@@ -951,11 +947,9 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
         build_dedup_index(archive, path)
         # white-box file surgery below targets fixed paths — pin the
         # committed generation dir (r11 generational builds)
-        from kcbdml9_big_data_processing_spark.queries.similarity import (
-            _gen_current,
-        )
+        from kcbdml9_big_data_processing_spark.store import gen_current
 
-        path = _gen_current(spark, path)
+        path = gen_current(spark, path)
         compact_dedup_index(spark, path, n_buckets=4)  # v1
         extend_dedup_index(batch1, path)  # lands in tail_v1
         pre_v2 = results()
@@ -990,7 +984,7 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
         assert meta["version"] == 1 and meta["tail"].endswith("_tail_v1")
         # the catalog table still points at v2's base; the search path
         # must re-register it from the (rolled-back) meta
-        spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
+        spark.sql(f"DROP TABLE IF EXISTS {bucketed_table_name(path)}")
         assert results() == pre_v2
 
         # restore the meta row ("the crash didn't happen after all")
@@ -999,14 +993,14 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
         for f, blob in removed:
             open(f, "wb").write(blob)
         spark.catalog.refreshByPath(f"{path}/bucket_meta")
-        spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
+        spark.sql(f"DROP TABLE IF EXISTS {bucketed_table_name(path)}")
         compact_dedup_index(spark, path, n_buckets=4)  # v3
         assert not os.path.isdir(f"{path}/postings_bucketed_v1")
         assert not os.path.isdir(f"{path}/postings_tail_v1")
         assert os.path.isdir(f"{path}/postings_bucketed_v2")
         assert results() == pre_v2
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
+        spark.sql(f"DROP TABLE IF EXISTS {bucketed_table_name(path)}")
 
 
 def test_semantic_index_label_ivf_blocking(spark, tmp_path):
@@ -1125,9 +1119,9 @@ def test_pq_index_incremental_extend(spark, tmp_path):
     extend_pq_index(batch, path)
 
     # (1) appended codes == argmin under the stored book
-    from kcbdml9_big_data_processing_spark.queries.similarity import _gen_current
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
-    book = spark.read.parquet(f"{_gen_current(spark, path)}/book")
+    book = spark.read.parquet(f"{gen_current(spark, path)}/book")
     w = Window.partitionBy("vec_id", "m").orderBy("dist_f", "code")
     want = {
         (r["vec_id"], r["m"]): r["code"]
@@ -1138,7 +1132,7 @@ def test_pq_index_incremental_extend(spark, tmp_path):
     }
     got = {
         (r["vec_id"], r["m"]): r["code"]
-        for r in spark.read.parquet(f"{_gen_current(spark, path)}/codes")
+        for r in spark.read.parquet(f"{gen_current(spark, path)}/codes")
         .where(F.col("vec_id") >= 70_000_000)
         .collect()
     }
@@ -1152,13 +1146,13 @@ def test_pq_index_incremental_extend(spark, tmp_path):
     codes_a = sorted(
         tuple(r)
         for r in spark.read.parquet(
-            f"{_gen_current(spark, path)}/codes"
+            f"{gen_current(spark, path)}/codes"
         ).collect()
     )
     codes_b = sorted(
         tuple(r)
         for r in spark.read.parquet(
-            f"{_gen_current(spark, path2)}/codes"
+            f"{gen_current(spark, path2)}/codes"
         ).collect()
     )
     assert codes_a == codes_b
@@ -1228,7 +1222,7 @@ def test_index_generation_crash_safety_and_vacuum(spark, tmp_path, monkeypatch):
     gen_meta row, the same recipe as the ngram family's compaction.
 
     (a) a build that crashes before its commit (simulated by making
-        _gen_commit raise) leaves the fully-written-but-uncommitted
+        the store's meta_append raise) leaves the fully-written-but-uncommitted
         staging dir invisible: searches keep answering from the
         previous generation — INCLUDING vectors appended via
         extend_semantic_index after that generation's build (the
@@ -1244,6 +1238,7 @@ def test_index_generation_crash_safety_and_vacuum(spark, tmp_path, monkeypatch):
 
     from pyspark.sql import functions as F
 
+    from kcbdml9_big_data_processing_spark import store
     from kcbdml9_big_data_processing_spark.queries import similarity as S
     from kcbdml9_big_data_processing_spark.sources.parquet import read_table
 
@@ -1294,7 +1289,7 @@ def test_index_generation_crash_safety_and_vacuum(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("crash before commit")
 
-    monkeypatch.setattr(S, "_gen_commit", boom)
+    monkeypatch.setattr(store, "meta_append", boom)
     try:
         S.build_semantic_index(archive.unionAll(batch1), path, n_cells=16)
     except RuntimeError:
@@ -1310,13 +1305,13 @@ def test_index_generation_crash_safety_and_vacuum(spark, tmp_path, monkeypatch):
     # and with it the candidate pair set — legitimately shifts (the
     # SemDeDup cell-boundary trade both docstrings state).
     S.build_semantic_index(archive.unionAll(batch1), path, n_cells=16)
-    assert S._gen_meta_row(spark, path)["version"] == 2
+    assert store.gen_meta_row(spark, path)["version"] == 2
     want_g2 = results()
     assert len(want_g2) > 0
     assert any(b >= 20_000_000 for _, b, _ in want_g2)
 
     # (c) retention GC: g1 is superseded; retain=1 deletes it
-    S.vacuum_index_generations(spark, path, retain=1)
+    store.vacuum_index_generations(spark, path, retain=1)
     assert not os.path.isdir(f"{path}/g1")
     assert os.path.isdir(f"{path}/g2")
     assert results() == want_g2
@@ -1338,6 +1333,7 @@ def test_ivf_pq_builds_are_generation_committed(spark, tmp_path, monkeypatch):
     search resolves both roots' current generations."""
     from pyspark.sql import functions as F
 
+    from kcbdml9_big_data_processing_spark import store
     from kcbdml9_big_data_processing_spark.queries import similarity as S
     from kcbdml9_big_data_processing_spark.sources.parquet import read_table
 
@@ -1360,7 +1356,7 @@ def test_ivf_pq_builds_are_generation_committed(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("crash before commit")
 
-    monkeypatch.setattr(S, "_gen_commit", boom)
+    monkeypatch.setattr(store, "meta_append", boom)
     half = emb.where(F.col("vec_id") % 2 == 0)
     for fn, p in ((S.build_ivf_index, ivf_path), (S.build_pq_index, pq_path)):
         try:
@@ -1541,27 +1537,6 @@ def test_semantic_index_default_resolves_label_for_small_corpus(
     assert _sem_meta(spark, adaptive)["blocking"] == "label_ivf"
 
 
-def test_gen_meta_absence_is_fs_checked(spark, tmp_path):
-    """ADVICE r11: _gen_meta_row decides legacy-vs-generational by a
-    driver-side existence check, not by swallowing read errors — a
-    root with NO gen_meta reads as legacy (None), an existing but
-    empty sidecar too, and the resolution isn't poisoned into the
-    per-process cache by a transient failure path."""
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-        _gen_meta_row,
-    )
-
-    root = str(tmp_path / "idx_root")
-    assert _gen_meta_row(spark, root) is None
-    # empty sidecar dir (created, nothing committed) -> still legacy
-    import os
-
-    os.makedirs(f"{root}/gen_meta", exist_ok=True)
-    assert _gen_meta_row(spark, root) is None
-    assert _gen_current(spark, root) == root
-
-
 def test_dedup_index_build_generations_crash_safe(spark, tmp_path):
     """r11: the ngram/hashes index family gets the same crash-safe
     BUILD generations as the vector indexes — a full re-freeze over a
@@ -1578,8 +1553,8 @@ def test_dedup_index_build_generations_crash_safe(spark, tmp_path):
         dedup_index_hashes,
         extend_dedup_index,
     )
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_begin,
+    from kcbdml9_big_data_processing_spark.store import (
+        gen_begin,
         vacuum_index_generations,
     )
 
@@ -1617,7 +1592,7 @@ def test_dedup_index_build_generations_crash_safe(spark, tmp_path):
     assert {(r["doc_a"], r["doc_b"]) for r in pairs.collect()} == {(3, 101)}
 
     # crash-sim: a staging dir written but never committed is invisible
-    gdir, v = _gen_begin(spark, root)
+    gdir, v = gen_begin(spark, root)
     assert (gdir, v) == (f"{root}/g3", 3)
     os.makedirs(gdir, exist_ok=True)
     spark.createDataFrame(
@@ -1652,7 +1627,7 @@ def test_gen_writers_resolve_uncached_and_legacy_vacuum(spark, tmp_path):
         dedup_index_hashes,
         extend_dedup_index,
     )
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
+    from kcbdml9_big_data_processing_spark.store import (
         _GEN_CACHE,
         _GEN_META_SCHEMA,
         vacuum_index_generations,
@@ -1734,12 +1709,12 @@ def test_index_writer_lock_contention_and_release(spark, tmp_path):
         build_dedup_index,
         extend_dedup_index,
     )
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
+    from kcbdml9_big_data_processing_spark.store import (
         IndexWriterLockError,
-        _maybe_writer_lock,
         disable_index_writer_locking,
         enable_index_writer_locking,
         force_unlock_index,
+        writer_lock,
     )
 
     docs = spark.createDataFrame(
@@ -1769,7 +1744,7 @@ def test_index_writer_lock_contention_and_release(spark, tmp_path):
         # reentrancy: the same process holding the root can still run
         # writers under it (no self-deadlock), and the OUTER frame
         # owns the release
-        with _maybe_writer_lock(spark, idx):
+        with writer_lock(spark, idx):
             build_dedup_index(docs, idx)
             assert os.path.exists(f"{idx}/_writer.lock")
         assert not os.path.exists(f"{idx}/_writer.lock")
@@ -1818,13 +1793,13 @@ def test_writer_lock_release_is_content_based(spark, tmp_path):
 
     import pytest as _pytest
 
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
+    from kcbdml9_big_data_processing_spark.store import (
         IndexWriterLockError,
         _lock_handles,
-        _maybe_writer_lock,
         _read_lock_token,
         disable_index_writer_locking,
         enable_index_writer_locking,
+        writer_lock,
     )
 
     root = str(tmp_path / "tick_idx")
@@ -1838,7 +1813,7 @@ def test_writer_lock_release_is_content_based(spark, tmp_path):
         # mtime to simulate a coarse-granularity filesystem tick
         # (HDFS: 1 s). A's release must read B's uuid, mismatch, and
         # leave the file.
-        a_cm = _maybe_writer_lock(spark, root)
+        a_cm = writer_lock(spark, root)
         a_cm.__enter__()
         old = _time.time() - 7200
         os.utime(lock, (old, old))
@@ -1846,7 +1821,7 @@ def test_writer_lock_release_is_content_based(spark, tmp_path):
         b_release = _threading.Event()
 
         def b_steal():
-            with _maybe_writer_lock(spark, root):  # B steals the stale lock
+            with writer_lock(spark, root):  # B steals the stale lock
                 os.utime(lock, (old, old))  # same tick as A's acquire
                 b_entered.set()
                 b_release.wait(30)
@@ -1865,7 +1840,7 @@ def test_writer_lock_release_is_content_based(spark, tmp_path):
         assert not os.path.exists(lock)  # B's own release still works
 
         # (b) foreign manual lock in place of ours: release leaves it
-        a_cm = _maybe_writer_lock(spark, root)
+        a_cm = writer_lock(spark, root)
         a_cm.__enter__()
         os.remove(lock)
         with open(lock, "w") as f:
@@ -1875,12 +1850,12 @@ def test_writer_lock_release_is_content_based(spark, tmp_path):
         os.remove(lock)
 
         # (c) same-process, different thread: contends, never enters
-        with _maybe_writer_lock(spark, root):
+        with writer_lock(spark, root):
             caught: list = []
 
             def attempt():
                 try:
-                    with _maybe_writer_lock(spark, root):
+                    with writer_lock(spark, root):
                         caught.append("entered")
                 except IndexWriterLockError:
                     caught.append("locked")
@@ -1899,7 +1874,7 @@ def test_writer_lock_rejects_non_positive_ttl():
     collapses to steal-anything, so enable rejects it (r12 review)."""
     import pytest as _pytest
 
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
+    from kcbdml9_big_data_processing_spark.store import (
         enable_index_writer_locking,
     )
 

@@ -115,11 +115,9 @@ def test_cli_index_lifecycle(spark, tmp_path):
         got = spark.read.parquet(out)
         assert set(got.columns) == {"doc_a", "doc_b", "jaccard"}
     finally:
-        from kcbdml9_big_data_processing_spark.queries.dedup import (
-            _bucketed_table_name,
-        )
+        from kcbdml9_big_data_processing_spark.store import bucketed_table_name
 
-        spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(idx)}")
+        spark.sql(f"DROP TABLE IF EXISTS {bucketed_table_name(idx)}")
 
     # stats after compaction reports the bucketed layout
     import contextlib
@@ -136,11 +134,9 @@ def test_cli_index_lifecycle(spark, tmp_path):
     assert "exact_hash_map=yes" in stats
     import shutil
 
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
-    shutil.rmtree(f"{_gen_current(spark, idx)}/hashes")
+    shutil.rmtree(f"{gen_current(spark, idx)}/hashes")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         assert _index_main(["stats", "--family", "ngram", *base], spark=spark) == 0
@@ -237,7 +233,7 @@ def test_cli_writer_lock_flag(spark, tmp_path):
     import pytest
 
     from kcbdml9_big_data_processing_spark.__main__ import _index_main
-    from kcbdml9_big_data_processing_spark.queries import similarity as S
+    from kcbdml9_big_data_processing_spark import store
 
     sf = "/root/testdata/sf0.001"
     idx = str(tmp_path / "locked_cli_idx")
@@ -247,29 +243,29 @@ def test_cli_writer_lock_flag(spark, tmp_path):
         spark=spark,
     ) == 0
     assert not os.path.exists(f"{idx}/_writer.lock")  # released
-    assert S._WRITER_LOCK_TTL is None  # toggle scoped to the invocation
+    assert store._WRITER_LOCK_TTL is None  # toggle scoped to the invocation
 
     with open(f"{idx}/_writer.lock", "w"):
         pass
-    with pytest.raises(S.IndexWriterLockError, match="locked"):
+    with pytest.raises(store.IndexWriterLockError, match="locked"):
         _index_main(
             ["extend", "--family", "ngram", *base, "--where", "doc_id % 8 = 1"],
             spark=spark,
         )
-    assert S._WRITER_LOCK_TTL is None  # reset even on failure
+    assert store._WRITER_LOCK_TTL is None  # reset even on failure
     os.remove(f"{idx}/_writer.lock")
 
     # r12 review: a host process's OWN enablement is restored, not
     # clobbered, by the invocation-scoped flag
-    S.enable_index_writer_locking(7200)
+    store.enable_index_writer_locking(7200)
     try:
         assert _index_main(
             ["extend", "--family", "ngram", *base, "--where", "doc_id % 8 = 2"],
             spark=spark,
         ) == 0
-        assert S._WRITER_LOCK_TTL == 7200.0
+        assert store._WRITER_LOCK_TTL == 7200.0
     finally:
-        S.disable_index_writer_locking()
+        store.disable_index_writer_locking()
 
 
 def test_cli_export_shards_and_retry(spark, tmp_path):
@@ -287,7 +283,7 @@ def test_cli_export_shards_and_retry(spark, tmp_path):
     import pytest
 
     from kcbdml9_big_data_processing_spark.__main__ import _export_shards_main
-    from kcbdml9_big_data_processing_spark.queries import similarity as S
+    from kcbdml9_big_data_processing_spark import store
     from kcbdml9_big_data_processing_spark.sinks.shards import (
         read_training_shards,
     )
@@ -319,7 +315,7 @@ def test_cli_export_shards_and_retry(spark, tmp_path):
         [*base, "--only-shards", "2", "--writer-lock-ttl", "3600"],
         spark=spark,
     ) == 0
-    assert S._WRITER_LOCK_TTL is None  # toggle scoped to the invocation
+    assert store._WRITER_LOCK_TTL is None  # toggle scoped to the invocation
     assert not os.path.exists(f"{out}/_writer.lock")  # released
     got_rows = read_training_shards(spark, out, shard=2, ordered=True).collect()
     assert got_rows == want_rows  # identical rows, identical order
@@ -738,3 +734,87 @@ def test_tool_paths_named_in_source_exist():
             if not (_REPO / "tools" / name).is_file():
                 missing.add(f"{path.name}: tools/{name}")
     assert not missing, sorted(missing)
+
+
+
+def _top_level_names(tree, imports: bool) -> set[str]:
+    """Names a module binds at top level: defs, classes, assignments,
+    and (with ``imports``) imported names."""
+    import ast
+
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names |= {t.id for t in targets if isinstance(t, ast.Name)}
+        elif imports and isinstance(node, (ast.Import, ast.ImportFrom)):
+            names |= {(a.asname or a.name).split(".")[0] for a in node.names}
+    return names
+
+
+def test_commit_store_reached_only_through_store():
+    """Generations, writer locks, meta logs and vacuum have ONE home,
+    store.py. Nothing reaches them through queries.similarity (their
+    old home): not by ``from ...similarity import`` (one line or a
+    parenthesized block), not as an attribute of an imported
+    similarity module, and similarity binds none of them. The store
+    imports nothing from ``queries``: it sits below every compute
+    module."""
+    import ast
+
+    pkg = _REPO / "kcbdml9_big_data_processing_spark"
+    store_tree = ast.parse((pkg / "store.py").read_text())
+    store_names = _top_level_names(store_tree, imports=False)
+    assert {"gen_commit", "writer_lock", "meta_append"} <= store_names
+
+    def moved(name: str) -> bool:
+        return (
+            name in store_names
+            or name.startswith("_gen_")
+            or name in {"_maybe_writer_lock", "_bucketed_table_name"}
+        )
+
+    offenders = []
+    for path in _source_files("kcbdml9_big_data_processing_spark", "tools", "tests"):
+        tree = ast.parse(path.read_text(), str(path))
+        sim_aliases = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                if (node.module or "").split(".")[-1] == "similarity":
+                    offenders += [
+                        f"{path.name}:{node.lineno} imports {a.name}"
+                        for a in node.names
+                        if moved(a.name)
+                    ]
+                sim_aliases |= {
+                    a.asname or a.name for a in node.names if a.name == "similarity"
+                }
+            elif isinstance(node, ast.Import):
+                sim_aliases |= {
+                    a.asname
+                    for a in node.names
+                    if a.asname and a.name.endswith(".similarity")
+                }
+        offenders += [
+            f"{path.name}:{node.lineno} uses .{node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in sim_aliases
+            and moved(node.attr)
+        ]
+    sim_tree = ast.parse((pkg / "queries" / "similarity.py").read_text())
+    offenders += [
+        f"similarity.py binds {n}"
+        for n in _top_level_names(sim_tree, imports=True)
+        if moved(n)
+    ]
+    for node in ast.walk(store_tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            mods = [node.module or ""] if isinstance(node, ast.ImportFrom) else []
+            mods += [a.name for a in node.names]
+            if any("queries" in m.split(".") for m in mods):
+                offenders.append(f"store.py:{node.lineno} imports from queries")
+    assert not offenders, offenders

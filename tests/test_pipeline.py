@@ -1130,11 +1130,9 @@ def test_run_incremental_legacy_index_falls_back_to_archive(
     )
     idx = str(tmp_path / "legacy_idx")
     build_dedup_index(archive, idx)
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
-    shutil.rmtree(f"{_gen_current(spark, idx)}/hashes")
+    shutil.rmtree(f"{gen_current(spark, idx)}/hashes")
     assert dedup_index_hashes(spark, idx) is None
 
     batch = spark.createDataFrame(
@@ -1281,9 +1279,7 @@ def test_legacy_index_fallback_warns(spark, tmp_path):
     from kcbdml9_big_data_processing_spark.queries.dedup import (
         build_dedup_index,
     )
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
     def words(prefix, n=10):
         return " ".join(f"{prefix}w{j}" for j in range(n))
@@ -1293,7 +1289,7 @@ def test_legacy_index_fallback_warns(spark, tmp_path):
     )
     idx = str(tmp_path / "warn_idx")
     build_dedup_index(archive, idx)
-    shutil.rmtree(f"{_gen_current(spark, idx)}/hashes")
+    shutil.rmtree(f"{gen_current(spark, idx)}/hashes")
     batch = spark.createDataFrame(
         [(101, words("b101"))], "doc_id long, text string"
     )
@@ -1323,9 +1319,7 @@ def test_hashes_max_sidecar_maintained_and_fast_paths_guard(
         dedup_index_hashes_max,
         extend_dedup_index,
     )
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
     def words(prefix, n=10):
         return " ".join(f"{prefix}w{j}" for j in range(n))
@@ -1348,7 +1342,7 @@ def test_hashes_max_sidecar_maintained_and_fast_paths_guard(
     # smuggle a violating map row in WITHOUT updating the sidecar —
     # impossible through the writers (sidecar appends first), so this
     # isolates what the fast path skips
-    gdir = _gen_current(spark, idx)
+    gdir = gen_current(spark, idx)
     spark.createDataFrame(
         [("deadbeef", 999)], "content_hash string, canonical_id long"
     ).write.mode("append").parquet(f"{gdir}/hashes")
@@ -1384,9 +1378,7 @@ def test_hashes_max_backfills_from_map_not_batch(spark, tmp_path):
         dedup_index_hashes_max,
         extend_dedup_index,
     )
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
+    from kcbdml9_big_data_processing_spark.store import gen_current
 
     def words(prefix, n=10):
         return " ".join(f"{prefix}w{j}" for j in range(n))
@@ -1397,7 +1389,7 @@ def test_hashes_max_backfills_from_map_not_batch(spark, tmp_path):
     )
     idx = str(tmp_path / "backfill_idx")
     build_dedup_index(archive, idx)
-    shutil.rmtree(f"{_gen_current(spark, idx)}/hashes_max")  # r11 state
+    shutil.rmtree(f"{gen_current(spark, idx)}/hashes_max")  # r11 state
     assert dedup_index_hashes_max(spark, idx) is None
 
     # disjoint but NON-monotonic batch id below the map's max

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pytest
 
+from kcbdml9_big_data_processing_spark import store
 from kcbdml9_big_data_processing_spark.jobs import runs as R
 from kcbdml9_big_data_processing_spark.jobs.runs import (
     TornRunError,
@@ -61,6 +62,18 @@ def _kept_ids(spark, rdir):
     return sorted(
         r["doc_id"] for r in spark.read.parquet(f"{rdir}/kept").collect()
     )
+
+
+def _crash_on_run_meta(real_append, msg):
+    """A store.meta_append stand-in that kills the run at its commit
+    point (the run_meta append) and lets every other meta log through."""
+
+    def append(spark_, meta_dir, schema, row):
+        if meta_dir.endswith("/run_meta"):
+            raise RuntimeError(msg)
+        real_append(spark_, meta_dir, schema, row)
+
+    return append
 
 
 def test_run_root_day1_full_day2_incremental(spark, tmp_path):
@@ -165,9 +178,7 @@ def test_run_root_torn_mid_extend_requires_repair(
     poisoned one), redoes the batch, and the final index carries each
     posting exactly once."""
     from kcbdml9_big_data_processing_spark.queries import dedup as D
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
+    from kcbdml9_big_data_processing_spark.store import gen_current
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "root")
@@ -205,7 +216,7 @@ def test_run_root_torn_mid_extend_requires_repair(
     # posting appears exactly once (the partial generation is gone)
     r3 = curate_run_root(spark, root, _docs(spark, DAY3), cfg)
     assert _kept_ids(spark, r3["dir"]) == [202]
-    gdir = _gen_current(spark, R.index_root(root), cached=False)
+    gdir = gen_current(spark, R.index_root(root), cached=False)
     dup_postings = (
         spark.read.parquet(f"{gdir}/postings")
         .groupBy("doc_id", "k")
@@ -227,15 +238,13 @@ def test_run_root_crash_before_commit_auto_publishes(
     cfg = CurationConfig()
     curate_run_root(spark, root, _docs(spark, DAY1), cfg)
 
-    real_commit = R._commit
-
-    def crash_commit(spark_, root_, run_id, rdir, mode):
-        raise RuntimeError("injected crash before meta commit")
-
-    monkeypatch.setattr(R, "_commit", crash_commit)
+    monkeypatch.setattr(
+        store, "meta_append",
+        _crash_on_run_meta(store.meta_append, "injected crash before meta commit"),
+    )
     with pytest.raises(RuntimeError, match="injected"):
         curate_run_root(spark, root, _docs(spark, DAY2), cfg)
-    monkeypatch.setattr(R, "_commit", real_commit)
+    monkeypatch.undo()
 
     assert latest_run(spark, root)["run_id"] == 1
     st = R.run_status(spark, root)["torn"]
@@ -528,14 +537,12 @@ def test_run_root_auto_publish_same_batch_short_circuits(
     cfg = CurationConfig()
     curate_run_root(spark, root, _docs(spark, DAY1), cfg)
 
-    real_commit = R._commit
     monkeypatch.setattr(
-        R, "_commit",
-        lambda *a: (_ for _ in ()).throw(RuntimeError("injected")),
+        store, "meta_append", _crash_on_run_meta(store.meta_append, "injected")
     )
     with pytest.raises(RuntimeError, match="injected"):
         curate_run_root(spark, root, _docs(spark, DAY2), cfg)
-    monkeypatch.setattr(R, "_commit", real_commit)
+    monkeypatch.undo()
 
     # the SAME command again: publishes r2 and STOPS — no torn r3
     out = curate_run_root(spark, root, _docs(spark, DAY2), cfg)
@@ -629,7 +636,7 @@ def test_run_root_writer_lock_enforced(spark, tmp_path):
     import os as _os
     import time as _time
 
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
+    from kcbdml9_big_data_processing_spark.store import (
         IndexWriterLockError,
         scoped_writer_lock_ttl,
     )
