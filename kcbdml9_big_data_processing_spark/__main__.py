@@ -77,6 +77,7 @@ import argparse
 import sys
 
 from . import store
+from .fs import dir_has_parquet, exists
 
 
 def _index_main(argv: list[str], spark=None) -> int:
@@ -246,13 +247,13 @@ def _index_stats(spark, family: str, path: str) -> int:
     """Print a persisted index's composition — the operational
     at-a-glance for the lifecycle commands above."""
     def rows(p, schema=None):
-        try:
-            r = spark.read
-            if schema:
-                r = r.schema(schema)
-            return r.parquet(p).count()
-        except Exception:
-            return None
+        """Row count of the table at ``p``, or ``"absent"`` when nothing
+        is there; any other read error propagates — a corrupt table
+        must fail the command, not print as missing."""
+        if not exists(spark, p):
+            return "absent"
+        r = spark.read if schema is None else spark.read.schema(schema)
+        return r.parquet(p).count()
 
     print(f"family={family} path={path}")
     if family == "ngram":
@@ -266,9 +267,7 @@ def _index_stats(spark, family: str, path: str) -> int:
         # vector families below
         path = store.gen_current(spark, path)
         print(f"generation_dir={path}")
-        from .queries.dedup import _dir_has_parquet
-
-        if _dir_has_parquet(spark, f"{path}/hashes"):
+        if dir_has_parquet(spark, f"{path}/hashes"):
             print("exact_hash_map=yes")
         else:
             print(
@@ -309,7 +308,7 @@ def _index_stats(spark, family: str, path: str) -> int:
         print(f"subspaces={m} codebook_entries={codes_per_m}")
         print(
             "indexed_vectors="
-            + str(n_codes // m if n_codes is not None and m else None)
+            + str(n_codes // m if isinstance(n_codes, int) and m else n_codes)
         )
     else:  # semantic
         from .queries.similarity import _SEM_BANDS_SCHEMA, _sem_meta

@@ -60,7 +60,7 @@ from ..sinks.shards import (
 )
 from ..sources.parquet import read_table, spread_scan
 from .dedup import _truncate_lineage
-from .registry import prepared_lifecycle_plan, register
+from .registry import prepared_lifecycle_plan, prepared_path, register
 from .text import _SW_ARR_SQL, _tokens_sql
 
 _WS = r"\s+"
@@ -90,32 +90,24 @@ _CHUNK_OVERLAP = 4
 _SHARD_N = 8
 _SHARD_SALT = 12
 
-#: per-process cache of WRITTEN training-shard exports, keyed by
-#: sf_dir — the _INDEX_PATHS build-once/read-many posture: the suite
-#: exports real shards into a scratch dir on first call, and every
-#: call's shard/shard_pos variants READ the written files, so the
-#: oracle hash pins the artifact write_training_shards actually
-#: produced (membership, order keys, and the partitioned layout), not
-#: just the assignment expressions. Parquet on disk outlives any one
-#: SparkSession; scratch dirs are reclaimed at process exit.
-_SHARD_EXPORT_PATHS: dict[str, str] = {}
-
-
 def _shard_export(docs: DataFrame, sf_dir: str) -> DataFrame:
-    path = _SHARD_EXPORT_PATHS.get(sf_dir)
-    if path is None:
-        from ..tmpdirs import scratch_dir
-
-        path = scratch_dir("shard_export_")
-        write_training_shards(
-            docs.select("doc_id"),
-            path,
-            _SHARD_N,
-            salt=_SHARD_SALT,
-            mode="overwrite",
-        )
-        _SHARD_EXPORT_PATHS[sf_dir] = path
-    return read_training_shards(docs.sparkSession, path)
+    """The training-shard export of ``docs``, WRITTEN once per (app,
+    sf_dir) (registry.prepared_path): the suite exports real shards
+    into a scratch dir on first call, and every call's shard/shard_pos
+    variants READ the written files, so the oracle hash pins the
+    artifact write_training_shards actually produced (membership,
+    order keys, and the partitioned layout), not just the assignment
+    expressions."""
+    spark = docs.sparkSession
+    path = prepared_path(
+        spark,
+        "shard_export",
+        sf_dir,
+        lambda p: write_training_shards(
+            docs.select("doc_id"), p, _SHARD_N, salt=_SHARD_SALT, mode="overwrite"
+        ),
+    )
+    return read_training_shards(spark, path)
 
 
 def _mix_threshold_sql() -> str:
@@ -527,7 +519,7 @@ def _llm_union_build(
     # the training-shard export (r11 verdict #1: the one operator with
     # no driver oracle row). The variants read a REAL export written
     # by write_training_shards into a per-process scratch dir
-    # (build-once/read-many, see _SHARD_EXPORT_PATHS): membership
+    # (build-once/read-many, see _shard_export): membership
     # ('shard') plus the within-shard sort key ('shard_pos', 48-bit so
     # the DOUBLE melt carries it exactly) are hash-checked against the
     # oracle's independent recomputation — pinning the written

@@ -24,8 +24,9 @@ from ..operators.metrics import conform_metric, windowed_sum
 from ..sources.parquet import read_table
 from ..streaming.sources import read_documents_stream, read_events_stream
 from ..streaming.telemetry import record_bounded_run
+from ..tmpdirs import scratch_dir
 from .parity import NINETY_SECONDS, _metric_oracle
-from .registry import register
+from .registry import prepared_path, register
 
 
 #: state partition count for the BOUNDED replays in this module.
@@ -202,8 +203,6 @@ def _drain_to_parquet(df: DataFrame, name: str):
     that legitimately commits zero rows (e.g. a join with no matches
     at a sparse SF) writes no data files, and schema inference would
     throw where the correct answer is an empty frame."""
-    from ..tmpdirs import scratch_dir
-
     out = scratch_dir(f"{name}_out_")
     ckpt = scratch_dir(f"{name}_ckpt_")
     q = (
@@ -524,13 +523,6 @@ def stream_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- custom stateful operator (applyInPandasWithState) ---------------------
 
-#: per-process cache of the multi-file replay source for
-#: stream_running_totals, keyed by (applicationId, sf_dir) — same
-#: immutable-input posture as similarity._INDEX_PATHS: the testdata
-#: under one sf_dir never changes within an application, so the
-#: projected copy is written once and replayed by every call.
-_RT_SRC_CACHE: dict[tuple[str, str], str] = {}
-
 _RT_FILES = 4  # replay files -> guaranteed micro-batch count
 
 
@@ -541,13 +533,12 @@ def _running_totals_source(spark: SparkSession, sf_dir: str) -> str:
     make the cross-batch accumulation integer-exact, where a float
     running sum would drift with batch order). Streaming this copy
     with maxFilesPerTrigger=1 forces >= _RT_FILES micro-batches, so
-    the state store genuinely carries totals across batches."""
-    from ..tmpdirs import scratch_dir
+    the state store genuinely carries totals across batches. The
+    testdata under one sf_dir never changes within an application, so
+    the copy is written once per (app, sf_dir) (registry.prepared_path)
+    and replayed by every call."""
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    path = _RT_SRC_CACHE.get(cache_key)
-    if path is None:
-        path = scratch_dir("running_totals_src_")
+    def write(path: str) -> None:
         (
             read_table(spark, sf_dir, "events")
             .select(
@@ -558,8 +549,8 @@ def _running_totals_source(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(path)
         )
-        _RT_SRC_CACHE[cache_key] = path
-    return path
+
+    return prepared_path(spark, "running_totals_src", sf_dir, write)
 
 
 @register(

@@ -181,6 +181,56 @@ def test_cli_index_lifecycle(spark, tmp_path):
     ) == 2
 
 
+def test_cli_index_stats_surfaces_read_errors(spark, tmp_path):
+    """``index stats`` decides a missing table by FS existence and
+    prints ``absent``; any other read error — here the compacted base
+    postings overwritten with non-parquet bytes — fails the command
+    instead of printing as a missing table."""
+    import contextlib
+    import io
+    import os
+    import re
+
+    from kcbdml9_big_data_processing_spark.__main__ import _index_main
+    from kcbdml9_big_data_processing_spark.queries.dedup import _bucket_meta
+    from kcbdml9_big_data_processing_spark.store import bucketed_table_name, gen_current
+
+    idx = str(tmp_path / "ngram_idx")
+    base = ["--sf", "/root/testdata/sf0.001", "--index-dir", idx]
+    try:
+        assert _index_main(
+            ["build", "--family", "ngram", *base, "--where", "doc_id % 2 = 0"],
+            spark=spark,
+        ) == 0
+        assert _index_main(["compact", "--family", "ngram", *base], spark=spark) == 0
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            assert _index_main(["stats", "--family", "ngram", *base], spark=spark) == 0
+        stats = buf.getvalue()
+        assert re.search(r"base_postings=[1-9]\d*\b", stats), stats
+        assert "tail_postings=" in stats
+
+        base_dir = _bucket_meta(spark, gen_current(spark, idx))["dir"]
+        assert base_dir.endswith("postings_bucketed_v1")
+        data = [n for n in os.listdir(base_dir) if n.endswith(".parquet")]
+        assert data
+        for name in data:
+            with open(f"{base_dir}/{name}", "wb") as f:
+                f.write(b"this is not a parquet file")
+            crc = f"{base_dir}/.{name}.crc"
+            if os.path.exists(crc):
+                os.remove(crc)
+        buf = io.StringIO()
+        try:
+            with contextlib.redirect_stdout(buf):
+                rc = _index_main(["stats", "--family", "ngram", *base], spark=spark)
+        except Exception:
+            rc = None  # the read error propagated
+        assert rc != 0, f"stats exited 0 over corrupt postings:\n{buf.getvalue()}"
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {bucketed_table_name(idx)}")
+
+
 def test_cli_train_writes_consumable_weights(spark, tmp_path):
     """The train subcommand fits classifier weights from a label
     expression over the documents table and writes the JSON artifact
@@ -724,16 +774,80 @@ def test_prepared_plan_cache_imported_only_from_registry():
 
 
 def test_tool_paths_named_in_source_exist():
-    """Every ``tools/<name>.py`` a comment or docstring cites must
-    exist, so a deleted tool cannot leave stale pointers behind."""
+    """Every ``tools/<name>.py`` or ``tests/<name>.py`` a comment or
+    docstring in the package or ``tools/`` cites must exist, so a
+    deleted or renamed file cannot leave stale pointers behind."""
     import re
 
     missing = set()
     for path in _source_files("kcbdml9_big_data_processing_spark", "tools"):
-        for name in re.findall(r"tools/(\w+\.py)", path.read_text()):
-            if not (_REPO / "tools" / name).is_file():
-                missing.add(f"{path.name}: tools/{name}")
+        for d, name in re.findall(r"\b(tools|tests)/(\w+\.py)", path.read_text()):
+            if not (_REPO / d / name).is_file():
+                missing.add(f"{path.name}: {d}/{name}")
     assert not missing, sorted(missing)
+
+
+#: the per-module scratch-store dicts (and the ANN-index helper) that
+#: registry.prepared_path replaced
+_RETIRED_STORE_NAMES = {
+    "_SHINGLED_STORE",
+    "_MINHASH_BANDS_STORE",
+    "_SIMHASH_SIGS_STORE",
+    "_RT_SRC_CACHE",
+    "_NEAR_DUP_PREPPED_STORE",
+    "_DEDUP_INDEX_PATHS",
+    "_SHARD_EXPORT_PATHS",
+    "_INDEX_PATHS",
+    "_ensure_index",
+}
+
+
+def _bound_names(tree) -> set[str]:
+    """Every name a module binds in any scope: assignment targets,
+    defs, classes, and import aliases."""
+    import ast
+
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+            names.add(node.id)
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names |= {(a.asname or a.name).split(".")[0] for a in node.names}
+    return names
+
+
+def test_scratch_stores_only_through_prepared_path():
+    """Per-(app, sf_dir) scratch artifacts have ONE cache,
+    registry.prepared_path: no file in the package or ``tools/``
+    binds a retired per-module store name, no module under
+    ``queries/`` imports ``scratch_dir`` inside a function (the
+    telltale of a hand-written store), and no module under
+    ``queries/`` but registry keys state by applicationId."""
+    import ast
+
+    pkg = _REPO / "kcbdml9_big_data_processing_spark"
+    offenders = []
+    for path in _source_files("kcbdml9_big_data_processing_spark", "tools"):
+        tree = ast.parse(path.read_text(), str(path))
+        for name in sorted(_bound_names(tree) & _RETIRED_STORE_NAMES):
+            offenders.append(f"{path.name}: binds {name}")
+        if path.parent != pkg / "queries":
+            continue
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.ImportFrom) and "scratch_dir" in {
+                    a.name for a in node.names
+                }:
+                    offenders.append(f"{path.name}:{node.lineno}: local scratch_dir import")
+        if path.name != "registry.py":
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+                    offenders.append(f"{path.name}:{node.lineno}: reads applicationId")
+    assert not offenders, offenders
 
 
 

@@ -1,14 +1,21 @@
-"""The registry's one prepared-plan cache, in both call shapes: the
-plain form hands back the same analyzed DataFrame on every call, the
-lifecycle form a fresh Dataset over the same analyzed plan plus the
-frames the caller persists per call. Tiny ``spark.range`` builds keep
-these fast."""
+"""The registry's per-process caches: the prepared-plan cache in both
+call shapes — the plain form hands back the same analyzed DataFrame on
+every call, the lifecycle form a fresh Dataset over the same analyzed
+plan plus the frames the caller persists per call — and the
+scratch-artifact cache behind ``prepared_path``. Tiny ``spark.range``
+builds and marker-file writes keep these fast."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from kcbdml9_big_data_processing_spark.queries.registry import (
+    _PREPARED_PATHS,
     _PREPARED_PLANS,
     prepared_lifecycle_plan,
+    prepared_path,
     prepared_plan,
 )
 
@@ -68,3 +75,60 @@ def test_one_clear_rebuilds_both_forms(spark):
     prepared_plan(spark, "t_clear_plain", "sf_a", plain)
     prepared_lifecycle_plan(spark, "t_clear_life", "sf_a", life)
     assert (len(plain_calls), len(life_calls)) == (2, 2)
+
+
+def _marker_writer():
+    """A ``write`` that records each directory it fills."""
+    written = []
+
+    def write(path):
+        with open(os.path.join(path, "marker"), "w") as f:
+            f.write("x")
+        written.append(path)
+
+    return write, written
+
+
+def test_prepared_path_writes_once_per_key(spark):
+    write, written = _marker_writer()
+    a = prepared_path(spark, "t_path", "sf_a", write)
+    assert prepared_path(spark, "t_path", "sf_a", write) == a
+    assert written == [a]
+    assert os.path.basename(a).startswith("t_path_")
+    assert os.path.isfile(os.path.join(a, "marker"))
+    # a different sf_dir or name is a different key, in a fresh dir
+    b = prepared_path(spark, "t_path", "sf_b", write)
+    c = prepared_path(spark, "t_path_2", "sf_a", write)
+    assert written == [a, b, c] and len({a, b, c}) == 3
+
+
+def test_prepared_path_failed_write_leaves_no_entry(spark):
+    tried = []
+
+    def failing(path):
+        tried.append(path)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError):
+        prepared_path(spark, "t_fail", "sf_a", failing)
+    assert not [k for k in _PREPARED_PATHS if k[1] == "t_fail"]
+    write, written = _marker_writer()
+    path = prepared_path(spark, "t_fail", "sf_a", write)
+    assert written == [path] and path != tried[0]
+    assert prepared_path(spark, "t_fail", "sf_a", write) == path
+    assert written == [path]
+
+
+def test_prepared_path_evicts_other_applications(spark):
+    stale = ("not-this-app", "t_path_stale", "sf_a")
+    _PREPARED_PATHS[stale] = "/nonexistent"
+    prepared_path(spark, "t_path_evict", "sf_a", _marker_writer()[0])
+    assert stale not in _PREPARED_PATHS
+
+
+def test_clearing_plans_keeps_paths(spark):
+    write, written = _marker_writer()
+    path = prepared_path(spark, "t_path_keep", "sf_a", write)
+    _PREPARED_PLANS.clear()
+    assert prepared_path(spark, "t_path_keep", "sf_a", write) == path
+    assert written == [path]
